@@ -36,9 +36,9 @@ private[graft] final class SessionKeyed[T] {
     entries.computeIfAbsent(spark, init(_))
   }
 
+  /** This session's entry, if any (never creates one). */
+  def find(spark: SparkSession): Option[T] = Option(entries.get(spark))
+
   /** Drop this session's entry, returning it for resource release. */
   def remove(spark: SparkSession): Option[T] = Option(entries.remove(spark))
-
-  /** Live entry count (test observability). */
-  def size: Int = { sweep(); entries.size }
 }

@@ -38,6 +38,9 @@ object Tables {
   /** Drop this session's plan memo (nothing persisted — no blocks to free). */
   def clear(spark: SparkSession): Unit = sessions.remove(spark)
 
+  /** Whether this session has a plan memo (test observability). */
+  private[graft] def holds(spark: SparkSession): Boolean = sessions.find(spark).isDefined
+
   /** Test seam: pre-seed the plan memo (and force view re-registration) so
     * a spec can interpose a wrapper — e.g. a failure-injecting filter —
     * between the scan and every consumer of `name`, then run the REAL

@@ -26,12 +26,26 @@ import org.apache.spark.sql.functions._
   */
 object GlobalOrder {
 
+  /** Working columns added to (and dropped from) the caller's frame. */
+  private val Internal = Seq("_go_pid", "_go_v", "_go_loc", "_go_off", "_go_rn0")
+
+  /** A caller column named like a working column would be overwritten and
+    * then dropped, so such a frame is rejected (case-insensitively, as
+    * Spark resolves names by default).
+    */
+  private def requireNoInternal(df: DataFrame): Unit =
+    df.columns.find(c => Internal.exists(_.equalsIgnoreCase(c))).foreach { c =>
+      throw new IllegalArgumentException(
+        s"GlobalOrder: input column '$c' collides with an internal column name; rename it")
+    }
+
   /** `df` plus `outName` = the EXCLUSIVE running sum of `value` (LongType)
     * over the global total order `order`, without a single-partition
     * window. Row order/partitioning of the output is unspecified.
     */
   def prefixSum(df: DataFrame, order: Seq[Column], value: Column,
       outName: String): DataFrame = {
+    requireNoInternal(df)
     val p = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val parts = df
       .repartitionByRange(p, order: _*)

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** A general Pregel-style vertex-program surface over DataFrames — the
@@ -134,8 +134,10 @@ final class Pregel private (
     */
   def setRequireConverged(b: Boolean): Pregel = copy(requireConverged = b)
 
-  /** Record this run's per-superstep (delivered messages, seconds) under
-    * `name` in [[Pregel.lastRuns]] — wall-clock regressions in iterative
+  /** Record this run's per-superstep (delivered messages, seconds) and
+    * its round-2 plan under `name`, in the vertices' session (read back
+    * through [[Pregel.lastRuns]] / [[Pregel.lastPlans]]; released by
+    * `SessionCache.clear`) — wall-clock regressions in iterative
     * operators hide INSIDE the driver loop, so the bench surfaces the
     * per-round breakdown, not just the total.
     */
@@ -295,14 +297,12 @@ final class Pregel private (
     // partition count pinned: a superstep's plan is fixed and pre-placed
     // (declared co-partitioning, pinned exchange count), so per-round
     // adaptive re-planning is pure driver overhead; the final state is
-    // re-rooted into the caller's session. Clones are cached per (base
-    // session, partition count) — fresh SessionState init costs a few
-    // hundred ms.
-    def sessionAt(p: Int) = Pregel.loopSessions
-      .get(vertices.sparkSession)(_ =>
-        new java.util.concurrent.ConcurrentHashMap[Int, org.apache.spark.sql.SparkSession]())
-      .computeIfAbsent(p,
-        org.apache.spark.sql.graft.InternalSnap.loopSession(vertices, _))
+    // re-rooted into the caller's session. Clones are child sessions of
+    // the base session per partition count (released with it by
+    // SessionCache.clear) — fresh SessionState init costs a few hundred ms.
+    def sessionAt(p: Int) =
+      graft.SessionCache.memoSession(vertices.sparkSession, s"pregel-loop:$p")(
+        org.apache.spark.sql.graft.InternalSnap.loopSession(vertices, p))
     val edgesPrep = edges.select(col("src").as("_esrc"), col("dst").as("_edst"),
       struct(col("*")).as("edge"))
     val statePrep = stateCols.foldLeft(vertices) {
@@ -352,12 +352,6 @@ final class Pregel private (
       val pReal = if (reliable || bytes == 0L) P0 else pFor(BigInt(bytes))
       if (pReal > 2 * P0 || P0 > 2 * pReal) pReal else P0
     }
-    if (sys.env.get("SPARK_GRAFT_PREGEL_TIMING").contains("1"))
-      System.err.println(s"[pregel-timing] P0=$P0 P=$P sessionP=$sessionP " +
-        s"estE=${edgesPrep.queryExecution.optimizedPlan.stats.sizeInBytes} " +
-        s"estS=${statePrep.queryExecution.optimizedPlan.stats.sizeInBytes} " +
-        s"realE=${org.apache.spark.sql.graft.InternalSnap.snappedStorageBytes(e)} " +
-        s"realS=${org.apache.spark.sql.graft.InternalSnap.snappedStorageBytes(cur)}")
     val ls = if (P == P0) ls0 else sessionAt(P)
     if (P != P0) {
       val e0 = e; val cur0 = cur
@@ -460,13 +454,6 @@ final class Pregel private (
         .observe(obs, sum(when(col(Pregel.MsgCol).isNotNull, 1L).otherwise(0L))
           .as("delivered"))
         .drop(Pregel.MsgCol)
-      val timing = sys.env.get("SPARK_GRAFT_PREGEL_TIMING").contains("1")
-      val tPlan = if (!timing) 0.0 else {
-        val p0 = System.nanoTime()
-        folded.queryExecution.executedPlan // force analyze→optimize→plan
-        (System.nanoTime() - p0) / 1e6
-      }
-      val t1 = System.nanoTime()
       val next = Iterate.snapKeyed(folded, Seq("id"), P, reliable, Some(ls))
       // `next` is fully materialized — release the dead generations NOW
       // (layer snaps and the previous state): a long hop-batched run
@@ -474,31 +461,22 @@ final class Pregel private (
       // (measured 30 GB of /tmp block files in one ×100 pass)
       layerSnaps.foreach(org.apache.spark.sql.graft.InternalSnap.freeSnapped)
       if (cur ne e) org.apache.spark.sql.graft.InternalSnap.freeSnapped(cur)
-      val tExec = (System.nanoTime() - t1) / 1e6
-      // Round-2 plan, recorded per tag (and dumpable via the dev knob):
-      // the steady-state shape — exchange-free co-partitioned joins, one
+      // Round-2 plan, recorded per tag (`graft.Explain` prints it): the
+      // steady-state shape — exchange-free co-partitioned joins, one
       // frontier shuffle, pruned endpoint states — either holds here or
       // doesn't, and `PregelSpec` pins it structurally.
-      if (i == 1 && tag.isDefined)
-        Pregel.lastPlans.put(tag.get, folded.queryExecution.executedPlan.toString)
-      if (i == 1 && sys.env.get("SPARK_GRAFT_PREGEL_EXPLAIN").contains("1"))
-        System.err.println(folded.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+      if (i == 1) tag.foreach(graft.SessionCache.record(vertices.sparkSession,
+        Pregel.PlansKind, _, folded.queryExecution.executedPlan.toString))
       // the eager checkpoint above already ran the plan; get() returns
       // the recorded metric without another action (null sum = no rows)
-      val t2 = System.nanoTime()
       val nDelivered =
         Option(obs.get("delivered")).map(_.asInstanceOf[Long]).getOrElse(0L)
-      if (timing)
-        System.err.println(
-          f"[pregel-timing] round ${i + 1}: plan $tPlan%.0f ms  " +
-            f"exec+ckpt $tExec%.0f ms  obs.get ${(System.nanoTime() - t2) / 1e6}%.0f ms")
       active = nDelivered != 0L
       rounds += ((nDelivered, (System.nanoTime() - t0) / 1e9))
       cur = next
       i += 1
     }
-    tag.foreach(Pregel.lastRuns.put(_, rounds.toSeq))
+    tag.foreach(graft.SessionCache.record(vertices.sparkSession, Pregel.RunsKind, _, rounds.toSeq))
     require(!requireConverged || !active,
       s"Pregel did not converge in $maxIterations supersteps — messages " +
         "were still flowing; raise setMaxIter (rounds scale with graph " +
@@ -512,26 +490,26 @@ object Pregel {
   private[operators] val MsgCol = "_pregel_msg"
   private[operators] val SaltCol = "_pregel_salt"
 
-  /** Per-tag per-superstep (delivered, seconds) of the most recent tagged
-    * [[Pregel.run]] — drained by `graft.Bench` into `bench_last.json`'s
-    * `graph_rounds` so superstep-level regressions are visible, not
-    * averaged away. Last-run-wins per tag; concurrent runs of the SAME
-    * tag would interleave, so bench reads it after its sequential rounds.
-    */
-  val lastRuns =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Double)]]()
+  private val RunsKind = "pregel-rounds"
+  private val PlansKind = "pregel-plan"
 
-  /** AQE-off loop sessions per (base session, pinned partition count). */
-  private[operators] val loopSessions =
-    new graft.SessionKeyed[java.util.concurrent.ConcurrentHashMap[
-      Int, org.apache.spark.sql.SparkSession]]
+  /** Per-tag per-superstep (delivered, seconds) of the most recent tagged
+    * [[Pregel.run]] in `spark` — drained by `graft.Bench` into
+    * `bench_last.json`'s `graph_rounds` so superstep-level regressions are
+    * visible, not averaged away. Last-run-wins per tag; concurrent runs of
+    * the SAME tag would interleave, so bench reads it after its
+    * sequential rounds.
+    */
+  def lastRuns(spark: SparkSession): Map[String, Seq[(Long, Double)]] =
+    graft.SessionCache.recorded(spark, RunsKind)
 
   /** Round-2 (steady-state) executed-plan string of the most recent
-    * tagged run — the structural evidence for the superstep contract
-    * (scan/join/exchange counts) that job- or stage-count proxies can't
-    * pin reliably across planner modes.
+    * tagged run in `spark` — the structural evidence for the superstep
+    * contract (scan/join/exchange counts) that job- or stage-count proxies
+    * can't pin reliably across planner modes.
     */
-  val lastPlans = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  def lastPlans(spark: SparkSession): Map[String, String] =
+    graft.SessionCache.recorded(spark, PlansKind)
 
   def apply(vertices: DataFrame, edges: DataFrame): Pregel =
     new Pregel(vertices, edges, Nil, Nil, Nil, None, 20, false, true, None,

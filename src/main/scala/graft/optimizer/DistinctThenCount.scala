@@ -20,8 +20,8 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * partial/final dedup, then hash(g) count), but Spark's dedicated
   * single-distinct aggregate machinery measured pathologically slow
   * under AQE — 38.9 s vs 3.9 s for the equivalent explicit
-  * distinct→count on a 1.2 M-row join output (`KcoreBuildProbe`,
-  * r11; still 4.6 s vs 2.3 s with parallelism-first coalescing). The
+  * distinct→count on a 1.2 M-row join output (q_graph_kcore's edge
+  * build, r11; still 4.6 s vs 2.3 s with parallelism-first coalescing). The
   * explicit form keeps both aggregates on the ordinary
   * map-side-combinable HashAggregate path.
   *

@@ -24,7 +24,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * is replicated N(+1) times through the FIRST shuffle, then the
   * dedicated distinct-aggregate machinery runs over the widened
   * null-padded stream (the same machinery that measured 10× slower under
-  * AQE — `KcoreBuildProbe`). The union form scans the child once per leg
+  * AQE — q_graph_kcore's edge build). The union form scans the child once per leg
   * instead, but each leg is a plain single-distinct aggregate: column
   * pruning narrows each scan to `g ++ ki`, and — because the extension
   * rules run inside the operator-optimization FIXED POINT — each leg

@@ -148,23 +148,20 @@ object Dedup extends QModule {
     * so downstream references stop replaying the lineage — which also
     * removes those subtrees from the FINAL executed plan the
     * plan-contract specs inspect. The PRE-checkpoint frame is recorded
-    * here per tag (last-call-wins, the [[graft.operators.Pregel.lastPlans]]
-    * pattern) so the contracts (cache-served band index, semi-join-bounded
-    * verify) stay pinned on the subtree that actually executes.
+    * per (session, tag) in [[graft.SessionCache]] (last-call-wins, read
+    * back through [[lastParts]]; `SessionCache.clear` releases it) so the
+    * contracts (cache-served band index, semi-join-bounded verify) stay
+    * pinned on the subtree that actually executes.
     */
-  private[graft] val lastParts =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  // The recorded frames are live DataFrames of whichever session ran the
-  // query last; without a release they pin that session and its lineage
-  // for the process lifetime (ADVICE r11 #1). SessionCache.clear — the
-  // teardown path Bench/Verify already call — drops this session's
-  // entries.
-  graft.SessionCache.onClear(s =>
-    lastParts.entrySet().removeIf(e => e.getValue.sparkSession eq s))
+  private val PartsKind = "dedup-part"
   private def snapPart(tag: String, df: DataFrame): DataFrame = {
-    lastParts.put(tag, df)
+    graft.SessionCache.record(df.sparkSession, PartsKind, tag, df)
     df.localCheckpoint()
   }
+
+  /** This session's recorded pre-checkpoint frames, by tag. */
+  private[graft] def lastParts(spark: SparkSession): Map[String, DataFrame] =
+    graft.SessionCache.recorded(spark, PartsKind)
 
   private def candidatePairs(s: SparkSession, d: String): DataFrame = {
     // Self-join input: persist so the shingle->minhash->band pipeline runs

@@ -557,7 +557,7 @@ object Graph extends QModule {
         // distinct-then-count, NOT countDistinct: the single-distinct
         // aggregate's planner rewrite measured 38.9 s under AQE where the
         // explicit (a, b, ok).distinct() → count form runs 3.9 s on the
-        // same input (KcoreBuildProbe) — same result, map-side-combinable
+        // same input (OPTIMIZATION_r11.md) — same result, map-side-combinable
         // dedup, no distinct-aggregate machinery.
         val li = graft.Tables.fanOut(graft.Tables.load(s, d, "lineitem"))
           .select(col("l_orderkey").as("ok"), col("l_partkey").as("a"))

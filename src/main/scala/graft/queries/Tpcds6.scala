@@ -24,7 +24,7 @@ object Tpcds6 extends QModule {
     * plus a windowed subquery in the IN filter. Scale: `rev` is one
     * map-side-combinable aggregate at (region, nation) grain — 25 rows
     * whatever the SF — so every window downstream is on dimension-sized
-    * data. Plan note (audited with graft.tools.Explain): Catalyst inlines
+    * data. Plan note (audited with graft.Explain): Catalyst inlines
     * the `rev` CTE into both consumers and the pushed semi filter makes
     * the copies non-identical, so the fact aggregate runs twice — the
     * same plan stock Spark produces for the reference's own q70.sql; a

@@ -21,13 +21,9 @@ object TimeSql {
     val spark = graft.Engine
       .builder("graft-timesql", s"local[$cpus]", cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_CONF="k=v;k2=v2" — session confs for before/after rule
-    // probes (e.g. forcing a gated optimizer rule on the ×10 fixture).
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").filter(_.nonEmpty)
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k.trim, v.trim)
-      })
+    sys.env.get("SPARK_GRAFT_CONF").foreach(parseConf(_).foreach {
+      case (k, v) => spark.conf.set(k, v)
+    })
     graft.Tables.register(spark, dir)
     for (r <- 1 to rounds) {
       val t0 = System.nanoTime()
@@ -38,4 +34,17 @@ object TimeSql {
       spark.sql(sql).explain("formatted")
     spark.stop()
   }
+
+  /** `SPARK_GRAFT_CONF="k=v;k2=v2"` — session confs for before/after rule
+    * probes (e.g. forcing a gated optimizer rule on the ×10 fixture). An
+    * entry without `=` fails naming the entry.
+    */
+  def parseConf(spec: String): Seq[(String, String)] =
+    spec.split(";").toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) => (k.trim, v.trim)
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CONF entry '$kv' is not key=value")
+      }
+    }
 }

@@ -479,9 +479,9 @@ class OperatorSpec extends SparkSpecBase {
     val clone = spark.newSession()
     SessionCache.memo(clone, "clone-key")(
       Tables.load(clone, sf, "region").persist())
-    val before = SessionCache.liveSessions
+    assert(SessionCache.holds(clone))
     SessionCache.clear(clone)
-    assert(SessionCache.liveSessions == before - 1,
+    assert(!SessionCache.holds(clone),
       "clear() must remove the session's registry entry")
   }
 
@@ -1194,14 +1194,14 @@ class OperatorSpec extends SparkSpecBase {
     // localCheckpointed (their lineage was replayed once per reference),
     // so the contracts live on the PRE-checkpoint subtrees recorded in
     // Dedup.lastParts — the subtrees that actually executed.
-    val cand = queries.Dedup.lastParts.get("inc-cand")
+    val cand = queries.Dedup.lastParts(spark)("inc-cand")
     cand.collect()
     val pc = cand.queryExecution.executedPlan.toString
     assert(!pc.contains("CartesianProduct"),
       s"candidate generation degraded to a cartesian:\n$pc")
     assert(pc.contains("InMemoryTableScan"),
       s"band index not served from the session-memoized cache:\n$pc")
-    val sdist = queries.Dedup.lastParts.get("inc-sdist")
+    val sdist = queries.Dedup.lastParts(spark)("inc-sdist")
     sdist.collect()
     val ps = sdist.queryExecution.executedPlan.toString
     assert(ps.contains("LeftSemi"),
@@ -1221,8 +1221,8 @@ class OperatorSpec extends SparkSpecBase {
       s"verify lost the single-pass set-intersection form:\n$p")
     assert(!p.contains("HashAggregate"),
       s"a per-pair aggregate reappeared after the set-store checkpoint:\n$p")
-    val sets = queries.Dedup.lastParts.get("jac-sdist")
-    assert(sets != null, "q_dedup_jaccard stopped recording the jac-sdist seam")
+    val sets = queries.Dedup.lastParts(spark).getOrElse("jac-sdist",
+      fail("q_dedup_jaccard stopped recording the jac-sdist seam"))
     sets.collect()
     val ps = sets.queryExecution.executedPlan.toString
     assert(ps.contains("LeftSemi"),
@@ -1231,18 +1231,35 @@ class OperatorSpec extends SparkSpecBase {
       s"set store lost the one-row-per-doc collect:\n$ps")
   }
 
-  test("SessionCache.clear releases the Dedup plan-seam frames of that session") {
-    // ADVICE r11 #1: lastParts is process-global and held live DataFrames
-    // forever, pinning the last session and its lineage. The clear hook
-    // must drop exactly the cleared session's entries.
-    import scala.jdk.CollectionConverters._
+  test("SessionCache.clear releases every record, child session and entry of a session") {
+    // SessionCache is the one owner of per-session state: memoized frames,
+    // child sessions (the BitmapDistinct gate, Pregel's AQE-off loop
+    // sessions) and recorded runs (Pregel's rounds and round-2 plans,
+    // Dedup's pre-checkpoint frames — ADVICE r11 #1: these pin their
+    // session and its lineage). One clear must release all of it, for the
+    // session and for each child it held.
+    import graft.operators.Pregel
     val ns = spark.newSession()
-    SparkEntry.queries("q_dedup_jaccard")(ns, sf).collect()
-    assert(queries.Dedup.lastParts.values().asScala.exists(_.sparkSession eq ns),
-      "the jaccard run did not record its seam frames")
+    for (q <- Seq("q_graph_rank", "q_agg_distinct_auto", "q_dedup_jaccard"))
+      SparkEntry.queries(q)(ns, sf).write.format("noop").mode("overwrite").save()
+    val kids = SessionCache.children(ns)
+    assert(Pregel.lastRuns(ns).contains("rank") && Pregel.lastPlans(ns).contains("rank"),
+      "q_graph_rank did not record its rounds and superstep plan")
+    assert(queries.Dedup.lastParts(ns).contains("jac-sdist"),
+      "q_dedup_jaccard did not record its seam frames")
+    assert(kids.contains("bitmap-distinct-gated"), s"no gated child session: ${kids.keys}")
+    assert(kids.keys.exists(_.startsWith("pregel-loop:")), s"no Pregel loop session: ${kids.keys}")
+    assert(Tables.holds(kids("bitmap-distinct-gated")), "the gated child loaded no tables")
     SessionCache.clear(ns)
-    assert(!queries.Dedup.lastParts.values().asScala.exists(_.sparkSession eq ns),
-      "clear left seam frames pinning the cleared session")
+    assert(Pregel.lastRuns(ns).isEmpty && Pregel.lastPlans(ns).isEmpty,
+      "clear left Pregel records pinning the cleared session")
+    assert(queries.Dedup.lastParts(ns).isEmpty, "clear left Dedup seam frames")
+    assert(SessionCache.children(ns).isEmpty && !SessionCache.holds(ns),
+      "clear left the session's registry entry")
+    kids.foreach { case (k, c) =>
+      assert(!SessionCache.holds(c) && !Tables.holds(c), s"child session $k outlived clear")
+    }
+    Tables.clear(ns)
   }
 
   test("q_dedup_incremental admits nothing from an empty corpus instead of NPE-ing") {
@@ -1257,5 +1274,28 @@ class OperatorSpec extends SparkSpecBase {
       Tables.load(spark, sf, "documents").where(lit(false)))
     val out = SparkEntry.queries("q_dedup_incremental")(spark, dir).collect()
     assert(out.isEmpty, s"empty corpus admitted ${out.length} rows")
+  }
+
+  test("GlobalOrder rejects a caller column named like one of its working columns") {
+    // The working columns are overwritten and then dropped, so a caller
+    // column of the same name would silently lose its values (ADVICE r12 #2).
+    import graft.operators.GlobalOrder
+    val df = spark.range(10).toDF("k")
+    assert(GlobalOrder.rowNumber(df, Seq(col("k")), "rn").count() == 10)
+    for (name <- Seq("_go_pid", "_go_v", "_go_loc", "_go_off", "_go_rn0", "_GO_V")) {
+      val clash = df.withColumn(name, col("k"))
+      val e1 = intercept[IllegalArgumentException](
+        GlobalOrder.prefixSum(clash, Seq(col("k")), col("k"), "ps"))
+      assert(e1.getMessage.contains(name), e1.getMessage)
+      val e2 = intercept[IllegalArgumentException](
+        GlobalOrder.rowNumber(clash, Seq(col("k")), "rn"))
+      assert(e2.getMessage.contains(name), e2.getMessage)
+    }
+  }
+
+  test("TimeSql conf parsing: key=value entries, a malformed entry named in the error") {
+    assert(tools.TimeSql.parseConf(" a.b = 1 ;c=x=y;;") == Seq("a.b" -> "1", "c" -> "x=y"))
+    val e = intercept[IllegalArgumentException](tools.TimeSql.parseConf("a=1;oops"))
+    assert(e.getMessage.contains("'oops'"), e.getMessage)
   }
 }

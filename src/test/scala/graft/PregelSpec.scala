@@ -124,8 +124,8 @@ class PregelSpec extends SparkSpecBase {
     val want = sssp(Pregel(vs, es).setMaxIter(60).setTag("hop1"))
       .run().select("id", "dist").as[(Long, Long)].collect().toMap
     assert(batched === want, "hop-batched distances diverged from unbatched")
-    val r8 = Pregel.lastRuns.get("hop8").size
-    val r1 = Pregel.lastRuns.get("hop1").size
+    val r8 = Pregel.lastRuns(spark)("hop8").size
+    val r1 = Pregel.lastRuns(spark)("hop1").size
     assert(r1 >= 41, s"unbatched chain should take >= diameter rounds, took $r1")
     assert(r8 == 6, s"hop-batched rounds should be ceil(40/8)+1 = 6, took $r8")
     // r12 layer fusion: composing layers UNMATERIALIZED (no per-layer lazy
@@ -206,7 +206,7 @@ class PregelSpec extends SparkSpecBase {
         .setMaxIter(4).setRequireConverged(false)
         .setTag(t)
         .run().write.format("noop").mode("overwrite").save()
-      Pregel.lastPlans.get(t)
+      Pregel.lastPlans(spark)(t)
     }
     def count(plan: String, needle: String): Int =
       plan.linesIterator.count(_.contains(needle))
@@ -251,8 +251,8 @@ class PregelSpec extends SparkSpecBase {
     assert(plain(0L) === 1L, "hub must take the spoke minimum")
     def count2(plan: String, needle: String): Int =
       plan.linesIterator.count(_.contains(needle))
-    val pOff = Pregel.lastPlans.get("spec-salt-off")
-    val pOn = Pregel.lastPlans.get("spec-salt-on")
+    val pOff = Pregel.lastPlans(spark)("spec-salt-off")
+    val pOn = Pregel.lastPlans(spark)("spec-salt-on")
     assert(count2(pOff, "Exchange") == 1,
       s"single-level superstep must have ONE frontier exchange:\n$pOff")
     assert(count2(pOn, "Exchange") == 2,

@@ -60,7 +60,7 @@ object StarProbe {
       val wall = (System.nanoTime() - t0) / 1e9
       spark.sparkContext.removeSparkListener(l)
       Thread.sleep(500) // drain listener bus
-      val rounds = Pregel.lastRuns.get(tag)
+      val rounds = Pregel.lastRuns(spark)(tag)
         .map { case (msgs, sec) => f"$msgs msgs ${sec}%.2fs" }.mkString(" | ")
       println(f"[star] salt=$s wall=$wall%.1fs rounds: $rounds")
       println(f"[star] salt=$s task concentration: max shuffle-read " +
