@@ -3,6 +3,7 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graft.InternalSnap
 
 /** The one owner of per-session state: memoized (persisted) frames,
   * child sessions, and recorded runs.
@@ -58,12 +59,13 @@ object SessionCache {
       e.records.asScala.collect { case ((`kind`, tag), v) => tag -> v.asInstanceOf[T] }.toMap
     }
 
-  /** Unpersist this session's memoized frames, drop its records, and
+  /** Release this session's memoized frames (persisted or snapped, via
+    * `InternalSnap.free`), drop its records, and
     * clear (here and in [[Tables]]) every child session it holds.
     */
   def clear(spark: SparkSession): Unit =
     sessions.remove(spark).foreach { e =>
-      if (!spark.sparkContext.isStopped) e.frames.values().forEach(df => df.unpersist())
+      if (!spark.sparkContext.isStopped) e.frames.values().forEach(InternalSnap.free)
       e.children.values().forEach { c => clear(c); Tables.clear(c) }
     }
 

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InternalSnap
 
 /** Connected components over an undirected edge list by iterative
   * min-label propagation — the duplicate-CLUSTERING step that turns
@@ -15,10 +16,10 @@ import org.apache.spark.sql.functions._
   * doubles as the convergence probe — the count of changed labels rides
   * out as an observed metric (`Dataset.observe` / CollectMetrics), so no
   * separate comparison job runs per round. Checkpointing truncates the
-  * growing lineage each round; `reliableCheckpoint = true` switches
-  * `localCheckpoint` (executor-local blocks — fine single-JVM) to the
-  * HDFS-backed `checkpoint` a 1000-executor cluster needs to survive
-  * executor loss (caller must set `sparkContext.setCheckpointDir`).
+  * growing lineage each round through `InternalSnap`: executor-local
+  * blocks (fine single-JVM), or, once `sparkContext.setCheckpointDir` is
+  * set, the reliable checkpoint a 1000-executor cluster needs to survive
+  * executor loss. Each round frees the generation it replaces.
   * Dup clusters are shallow in practice (near-clique neighborhoods), so
   * propagation converges in a handful of rounds; a component whose
   * diameter exceeds `maxIter` fails LOUDLY (require) instead of
@@ -40,18 +41,18 @@ object Components {
     */
   def labelPropagate(
       edges: DataFrame, a: String, b: String, maxIter: Int = 20,
-      reliableCheckpoint: Boolean = false, star: Boolean = false): DataFrame = {
-    if (star) return starContract(edges, a, b, maxIter, reliableCheckpoint)
+      star: Boolean = false): DataFrame = {
+    if (star) return starContract(edges, a, b, maxIter)
     // State-stationary placement (the r9 Pregel dataflow): the
     // symmetrized edges live hash-partitioned on the PROBE endpoint
     // (`dst`), labels on `id`, both layouts DECLARED through the
-    // checkpoint (Iterate.snapKeyed) so every round's neighbor join is an
+    // checkpoint (InternalSnap.snapKeyed) so every round's neighbor join is an
     // exchange-free co-partitioned shuffle-hash join and the fold join
     // leaves the label table in place — the only per-round movement is
     // the min-label message aggregation.
     val P = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     def snapped(df: DataFrame, keys: Seq[String]): DataFrame =
-      Iterate.snapKeyed(df, keys, P, reliableCheckpoint)
+      InternalSnap.snapKeyed(df, keys, P)
     val sym = snapped(
       edges.select(col(a).as("src"), col(b).as("dst"))
         .union(edges.select(col(b).as("src"), col(a).as("dst")))
@@ -81,6 +82,7 @@ object Components {
       // eager checkpoint above already ran the plan; get() returns the
       // recorded metric without another action (null sum = empty input)
       converged = Option(obs.get("changed")).forall(_ == 0L)
+      InternalSnap.free(labels)
       labels = next
       i += 1
     }
@@ -115,11 +117,10 @@ object Components {
     * on a non-star edge set, loudly rather than silently.
     */
   private def starContract(
-      edges: DataFrame, a: String, b: String, maxIter: Int,
-      reliableCheckpoint: Boolean): DataFrame = {
-    // Iterate.snap: large-star references the edge set twice per round,
-    // so carried stats estimates double in digit count every round
-    def snap(df: DataFrame): DataFrame = Iterate.snap(df, reliableCheckpoint)
+      edges: DataFrame, a: String, b: String, maxIter: Int): DataFrame = {
+    // InternalSnap.snap: large-star references the edge set twice per
+    // round, so carried stats estimates double in digit count every round
+    import InternalSnap.snap
     val raw = edges.select(col(a).as("u"), col(b).as("v"))
     val nodes = snap(
       raw.select(col("u").as("id")).union(raw.select(col("v").as("id"))).distinct())
@@ -153,6 +154,7 @@ object Components {
         Option(obs.get("fp")).fold(0L)(_.asInstanceOf[Long]))
       converged = prevFp.contains(fp)
       prevFp = Some(fp)
+      InternalSnap.free(e)
       e = next
       i += 1
     }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InternalSnap
 
 /** Distributed global-order primitives (r12; guide §2/§5 — VERDICT r11
   * "global-window scale-killers"): a `Window.orderBy` with no
@@ -53,9 +54,8 @@ object GlobalOrder {
       .withColumn("_go_v", value)
     val w = Window.partitionBy("_go_pid").orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, -1)
-    val local = parts
-      .withColumn("_go_loc", coalesce(sum(col("_go_v")).over(w), lit(0L)))
-      .localCheckpoint()
+    val local = InternalSnap.snap(parts
+      .withColumn("_go_loc", coalesce(sum(col("_go_v")).over(w), lit(0L))))
     val tot = local.groupBy("_go_pid").agg(sum(col("_go_v")).as("_go_t"))
     val prev = tot.select(col("_go_pid").as("_go_pid2"), col("_go_t").as("_go_t2"))
     val off = tot.join(prev, col("_go_pid2") < col("_go_pid"), "left")

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InternalSnap
 
 /** k-core decomposition by iterative peeling — the degree-threshold
   * subgraph primitive of the GraphX capability class (cohesive-subgraph
@@ -18,7 +19,8 @@ import org.apache.spark.sql.functions._
   * vertex, nothing driver-sized ever collected (the loop reads one
   * COUNT per round to detect the fixpoint, the same convergence probe
   * as [[Pregel]]'s observed message count). Live sets snap through
-  * [[Iterate.snap]] so lineage and stats stay flat across rounds.
+  * `InternalSnap.snap` so lineage and stats stay flat across rounds, and
+  * every snap but the returned one is freed on exit.
   *
   * Scale (100 TB): work per round tracks the LIVE edge count, which is
   * monotone non-increasing; peel depth is a graph property (not a data
@@ -37,8 +39,8 @@ object KCore {
     * (spec/observability surface).
     */
   def runWithRounds(edges: DataFrame, k: Int, maxIter: Int = 60): (DataFrame, Int) = {
-    val e = Iterate.snap(edges.select(col("u"), col("v")), reliable = false)
-    var alive = Iterate.snap(e.select(col("u").as("id")).distinct(), reliable = false)
+    val e = InternalSnap.snap(edges.select(col("u"), col("v")))
+    var alive = InternalSnap.snap(e.select(col("u").as("id")).distinct())
     var n = alive.count()
     val trail = scala.collection.mutable.ArrayBuffer[DataFrame](alive)
     var rounds = 0
@@ -52,7 +54,7 @@ object KCore {
           .join(alive.select(col("id").as("au")), col("u") === col("au"), "left_semi")
           .join(alive.select(col("id").as("av")), col("v") === col("av"), "left_semi")
         val deg = live.groupBy(col("u").as("id")).agg(count(lit(1)).as("core_deg"))
-        val next = Iterate.snap(deg.filter(col("core_deg") >= k), reliable = false)
+        val next = InternalSnap.snap(deg.filter(col("core_deg") >= k))
         trail += next
         val n2 = next.count()
         if (n2 == n) return (next, rounds)
@@ -61,8 +63,8 @@ object KCore {
       }
       sys.error("unreachable")
     } finally {
-      trail.dropRight(1).foreach(_.unpersist())
-      e.unpersist()
+      trail.dropRight(1).foreach(InternalSnap.free)
+      InternalSnap.free(e)
     }
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InternalSnap
 
 /** A general Pregel-style vertex-program surface over DataFrames — the
   * bulk-synchronous message-passing model of the reference's GraphX
@@ -29,10 +30,11 @@ import org.apache.spark.sql.functions._
   * src, then dst) and messages once (hash on target id) — all three are
   * map-side-combinable or join-key partitionings Catalyst plans as
   * ordinary equi-joins; state is one row per vertex, never per edge.
-  * Checkpointing truncates the growing lineage each round
-  * (`reliableCheckpoint = true` switches executor-local blocks to the
-  * HDFS-backed variant a 1000-executor cluster needs to survive executor
-  * loss).
+  * Checkpointing truncates the growing lineage each round; every snap
+  * goes through `InternalSnap`, so setting `sparkContext.setCheckpointDir`
+  * switches all of them, hop-batch layers included, from executor-local
+  * blocks to the reliable variant a 1000-executor cluster needs to
+  * survive executor loss.
   *
   * Long diameters: a Θ(diameter) program (SSSP, flooding) needs
   * `maxIter × hopBatch ≥ diameter` — the run fails LOUDLY on
@@ -73,7 +75,6 @@ final class Pregel private (
     msgsToSrc: Seq[Column],
     aggExpr: Option[Column],
     maxIterations: Int,
-    reliable: Boolean,
     requireConverged: Boolean,
     tag: Option[String],
     tripletFields: Option[(Boolean, Boolean)],
@@ -87,7 +88,6 @@ final class Pregel private (
       msgsToSrc: Seq[Column] = msgsToSrc,
       aggExpr: Option[Column] = aggExpr,
       maxIterations: Int = maxIterations,
-      reliable: Boolean = reliable,
       requireConverged: Boolean = requireConverged,
       tag: Option[String] = tag,
       tripletFields: Option[(Boolean, Boolean)] = tripletFields,
@@ -95,7 +95,7 @@ final class Pregel private (
       hopBatch: Int = hopBatch,
       layerFuse: Int = layerFuse): Pregel =
     new Pregel(vertices, edges, stateCols, msgsToDst, msgsToSrc, aggExpr,
-      maxIterations, reliable, requireConverged, tag, tripletFields,
+      maxIterations, requireConverged, tag, tripletFields,
       messageSalt, hopBatch, layerFuse)
 
   /** Add a state column: `init` is evaluated once over the vertex row;
@@ -122,11 +122,6 @@ final class Pregel private (
   def aggMsgs(agg: Column): Pregel = copy(aggExpr = Some(agg))
 
   def setMaxIter(n: Int): Pregel = copy(maxIterations = n)
-
-  /** HDFS-backed checkpoints (caller sets `sparkContext.setCheckpointDir`)
-    * instead of executor-local blocks — required on a real cluster.
-    */
-  def setReliableCheckpoint(b: Boolean): Pregel = copy(reliable = b)
 
   /** `false` runs exactly `maxIter` supersteps without the loud
     * non-convergence failure — for fixed-iteration algorithms
@@ -258,7 +253,7 @@ final class Pregel private (
     require(edges.columns.contains("src") && edges.columns.contains("dst"),
       "edges must carry `src` and `dst` columns")
 
-    // Iterate.snapKeyed, not plain checkpoint: (a) a triplet join
+    // InternalSnap.snapKeyed, not plain checkpoint: (a) a triplet join
     // references the state TWICE, so carried stats estimates square per
     // superstep without the cap; (b) the declared hash layout is what
     // keeps every round's joins exchange-free — see the dataflow note
@@ -277,9 +272,9 @@ final class Pregel private (
     // hash-partitioned ONCE on the frequently-joined endpoint; the state
     // table starts hash-partitioned on `id` and every superstep's fold
     // (a co-partitioned stream-side join) preserves that partitioning,
-    // which `Iterate.snap` carries THROUGH the checkpoint. The per-round
-    // triplet join is therefore exchange-free and broadcast-free (the
-    // shuffle_hash hint keeps Catalyst from re-introducing a per-round
+    // which `InternalSnap.snapKeyed` carries THROUGH the checkpoint. The
+    // per-round triplet join is therefore exchange-free and broadcast-free
+    // (the shuffle_hash hint keeps Catalyst from re-introducing a per-round
     // driver collect+broadcast of the whole state, whose cost scales with
     // STATE size); the only per-round data movement is the message
     // aggregation + its repartition back onto the state layout — both
@@ -302,7 +297,7 @@ final class Pregel private (
     // SessionCache.clear) — fresh SessionState init costs a few hundred ms.
     def sessionAt(p: Int) =
       graft.SessionCache.memoSession(vertices.sparkSession, s"pregel-loop:$p")(
-        org.apache.spark.sql.graft.InternalSnap.loopSession(vertices, p))
+        InternalSnap.loopSession(vertices, p))
     val edgesPrep = edges.select(col("src").as("_esrc"), col("dst").as("_edst"),
       struct(col("*")).as("edge"))
     val statePrep = stateCols.foldLeft(vertices) {
@@ -314,8 +309,8 @@ final class Pregel private (
     // ~2 MB per partition — CAPPED at the session setting, so a real
     // cluster's configured parallelism is never exceeded and only
     // genuinely small state is consolidated. Reliable checkpoints persist
-    // outside the block manager (bytes unknown → keep the session
-    // setting).
+    // outside the block manager (bytes unknown → keep the estimated
+    // count).
     //
     // r11: the count is sized from the optimizer's sizeInBytes ESTIMATE
     // first, so both tables snap at their loop layout in ONE
@@ -336,57 +331,30 @@ final class Pregel private (
     // Tungsten blocks on the order-chain graphs (est 1.6 MB vs 16.7 MB),
     // hence ×8 to land the one-shot guess inside the 2× guard band.
     def inBytes(df: DataFrame): BigInt =
-      org.apache.spark.sql.graft.InternalSnap.materializedInputBytes(df)
+      InternalSnap.materializedInputBytes(df)
         .map(BigInt(_))
         .getOrElse(df.queryExecution.optimizedPlan.stats.sizeInBytes * 8)
-    val P0 =
-      if (reliable) sessionP
-      else pFor(inBytes(edgesPrep).max(inBytes(statePrep)))
+    val P0 = pFor(inBytes(edgesPrep).max(inBytes(statePrep)))
     val ls0 = sessionAt(P0)
-    var e = Iterate.snapKeyed(edgesPrep, Seq(partKey), P0, reliable, Some(ls0))
-    var cur = Iterate.snapKeyed(statePrep, Seq("id"), P0, reliable, Some(ls0))
+    var e = InternalSnap.snapKeyed(edgesPrep, Seq(partKey), P0, Some(ls0))
+    var cur = InternalSnap.snapKeyed(statePrep, Seq("id"), P0, Some(ls0))
     val P = {
-      val bytes = math.max(
-        org.apache.spark.sql.graft.InternalSnap.snappedStorageBytes(e),
-        org.apache.spark.sql.graft.InternalSnap.snappedStorageBytes(cur))
-      val pReal = if (reliable || bytes == 0L) P0 else pFor(BigInt(bytes))
+      val bytes = Pregel.snapBytes(e, cur)
+      val pReal = if (bytes == 0L) P0 else pFor(BigInt(bytes))
       if (pReal > 2 * P0 || P0 > 2 * pReal) pReal else P0
     }
     val ls = if (P == P0) ls0 else sessionAt(P)
     if (P != P0) {
       val e0 = e; val cur0 = cur
-      e = Iterate.snapKeyed(e, Seq(partKey), P, reliable, Some(ls))
-      cur = Iterate.snapKeyed(cur, Seq("id"), P, reliable, Some(ls))
-      org.apache.spark.sql.graft.InternalSnap.freeSnapped(e0)
-      org.apache.spark.sql.graft.InternalSnap.freeSnapped(cur0)
+      e = InternalSnap.snapKeyed(e, Seq(partKey), P, Some(ls))
+      cur = InternalSnap.snapKeyed(cur, Seq("id"), P, Some(ls))
+      InternalSnap.free(e0)
+      InternalSnap.free(cur0)
     }
-    // Effective fuse width is SIZE-GATED (measured, r12): fusing k layers
-    // re-reads the state/edge checkpoint blocks once per duplicated
-    // reference (the post-shuffle fold chains that ReuseExchange cannot
-    // dedupe), trading block-read bytes for saved per-round floors
-    // (~0.1 s scheduling + snap job each). sf0.1 order chains
-    // (state+edges ≈ 17 MB blocks): fuse-4 measured 4.1 s vs 5.4 s
-    // unfused. The ×10 fixture (184 MB blocks): fuse-4 measured 133 s vs
-    // 100 s per-layer-snapped — re-reads dominate. Break-even ≈ round
-    // floor × block bandwidth / extra-reads ≈ 50 MB; the gate reads the
-    // EXACT materialized bytes (no estimate) and larger state keeps the
-    // r11 per-layer lazy-snap behavior. Clusters with a higher per-round
-    // barrier cost can raise the threshold per-deploy.
-    val fuseEff = {
-      val blockBytes = math.max(
-        org.apache.spark.sql.graft.InternalSnap.snappedStorageBytes(e),
-        org.apache.spark.sql.graft.InternalSnap.snappedStorageBytes(cur))
-      val maxBytes = vertices.sparkSession.conf
-        .get("spark.graft.pregel.fuseMaxBytes", (48L << 20).toString).toLong
-      if (reliable || blockBytes <= 0L || blockBytes > maxBytes) 1 else layerFuse
-    }
-    var i = 0
-    var active = true
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
     // One relaxation LAYER: triplet join → gated messages → frontier
     // fold → state update; returns the updated state WITH the message
     // column still attached (the caller observes or drops it).
-    def relax(state: DataFrame): DataFrame = {
+    def relaxWith(state: DataFrame, salt: Int): DataFrame = {
       val triSrc =
         if (!needSrc) e
         else e.join(
@@ -411,12 +379,12 @@ final class Pregel private (
       // for a hot vertex, at the price of a second frontier exchange.
       val inbound = outbound.reduce(_ unionByName _)
         .where(col(Pregel.MsgCol).isNotNull)
-      val delivered = (if (messageSalt <= 1) {
+      val delivered = (if (salt <= 1) {
         inbound.groupBy("id").agg(agg.as(Pregel.MsgCol))
       } else {
         inbound
           .withColumn(Pregel.SaltCol,
-            pmod(monotonically_increasing_id(), lit(messageSalt.toLong)))
+            pmod(monotonically_increasing_id(), lit(salt.toLong)))
           .groupBy("id", Pregel.SaltCol).agg(agg.as(Pregel.MsgCol))
           .groupBy("id").agg(agg.as(Pregel.MsgCol))
       })
@@ -425,6 +393,31 @@ final class Pregel private (
         case (df, (n, _, update)) => df.withColumn(n, update)
       }
     }
+    // Effective fuse width is SIZE-GATED (measured, r12): fusing k layers
+    // re-reads the state/edge checkpoint blocks once per duplicated
+    // reference (the post-shuffle fold chains that ReuseExchange cannot
+    // dedupe), trading block-read bytes for saved per-round floors
+    // (~0.1 s scheduling + snap job each). sf0.1 order chains
+    // (state+edges ≈ 17 MB blocks): fuse-4 measured 4.1 s vs 5.4 s
+    // unfused. The ×10 fixture (184 MB blocks): fuse-4 measured 133 s vs
+    // 100 s per-layer-snapped — re-reads dominate. Break-even ≈ round
+    // floor × block bandwidth / extra-reads ≈ 50 MB; the gate reads the
+    // EXACT materialized bytes (no estimate) and larger state keeps the
+    // r11 per-layer lazy-snap behavior ([[Pregel.fusable]]).
+    //
+    // Fusion also requires deterministic state-update, message and
+    // aggregate expressions (ADVICE r12 #1): a fused layer is evaluated
+    // once for both of its consumers only through ReuseExchange, while a
+    // layer snap guarantees it. The check analyzes one unsalted layer (the
+    // salt's round-robin id is non-deterministic by design and harmless).
+    def relax(state: DataFrame): DataFrame = relaxWith(state, messageSalt)
+    val fuseEff =
+      if (hopBatch > 1 && Pregel.fusable(e, cur) &&
+        relaxWith(cur, 1).queryExecution.analyzed.deterministic) layerFuse
+      else 1
+    var i = 0
+    var active = true
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[(Long, Double)]
     while (active && i < maxIterations) {
       val t0 = System.nanoTime()
       // hopBatch relaxation layers compose into ONE action; convergence
@@ -433,18 +426,18 @@ final class Pregel private (
       // consecutive layers compose UNMATERIALIZED (see setLayerFuse:
       // the one exchange per layer is reference-identical on both of a
       // layer's consumers, so ReuseExchange computes it once and the
-      // duplication is post-shuffle projection only); a LAZY
-      // localCheckpoint lands at fuse-group boundaries, bounding the
-      // 2^f logical-plan growth while keeping each group's layers
-      // co-partitioned as planned (LogicalRDD carries the
-      // partitioning). localCheckpoint row blocks, not persist(): the
-      // columnar cache build measured ~7× a whole superstep per layer.
+      // duplication is post-shuffle projection only); a LAZY local snap
+      // lands at fuse-group boundaries, bounding the 2^f logical-plan
+      // growth while keeping each group's layers co-partitioned as
+      // planned (LogicalRDD carries the partitioning). Checkpoint row
+      // blocks, not persist(): the columnar cache build measured ~7× a
+      // whole superstep per layer.
       var body = relax(cur)
       var layerSnaps = List.empty[DataFrame]
       for (layer <- 2 to hopBatch) {
         body =
           if ((layer - 1) % fuseEff == 0) {
-            val ck = body.drop(Pregel.MsgCol).localCheckpoint(false)
+            val ck = InternalSnap.snap(body.drop(Pregel.MsgCol), eager = false)
             layerSnaps ::= ck
             relax(ck)
           } else relax(body.drop(Pregel.MsgCol))
@@ -454,13 +447,13 @@ final class Pregel private (
         .observe(obs, sum(when(col(Pregel.MsgCol).isNotNull, 1L).otherwise(0L))
           .as("delivered"))
         .drop(Pregel.MsgCol)
-      val next = Iterate.snapKeyed(folded, Seq("id"), P, reliable, Some(ls))
+      val next = InternalSnap.snapKeyed(folded, Seq("id"), P, Some(ls))
       // `next` is fully materialized — release the dead generations NOW
       // (layer snaps and the previous state): a long hop-batched run
       // otherwise accumulates every layer's blocks for its lifetime
       // (measured 30 GB of /tmp block files in one ×100 pass)
-      layerSnaps.foreach(org.apache.spark.sql.graft.InternalSnap.freeSnapped)
-      if (cur ne e) org.apache.spark.sql.graft.InternalSnap.freeSnapped(cur)
+      layerSnaps.foreach(InternalSnap.free)
+      if (cur ne e) InternalSnap.free(cur)
       // Round-2 plan, recorded per tag (`graft.Explain` prints it): the
       // steady-state shape — exchange-free co-partitioned joins, one
       // frontier shuffle, pruned endpoint states — either holds here or
@@ -481,14 +474,32 @@ final class Pregel private (
       s"Pregel did not converge in $maxIterations supersteps — messages " +
         "were still flowing; raise setMaxIter (rounds scale with graph " +
         "diameter) instead of consuming partial state")
-    org.apache.spark.sql.graft.InternalSnap
-      .reRootSnapped(cur, vertices.sparkSession)
+    InternalSnap.reRootSnapped(cur, vertices.sparkSession)
   }
 }
 
 object Pregel {
   private[operators] val MsgCol = "_pregel_msg"
   private[operators] val SaltCol = "_pregel_salt"
+
+  /** The fuse gate's threshold on materialized bytes (measured, r12 —
+    * see the fuse-gate note in [[Pregel.run]]).
+    */
+  private val FuseMaxBytes = 48L << 20
+
+  /** The largest block-manager size among `snaps` (0 when unknown). */
+  private def snapBytes(snaps: DataFrame*): Long =
+    snaps.map(InternalSnap.materializedInputBytes(_).getOrElse(0L)).max
+
+  /** The one fuse gate: whether state materialized as `snaps` is small
+    * enough (known and at most 48 MiB of blocks) for fused layers' block
+    * re-reads to cost less than the per-round floors they save. Used by
+    * Pregel's own layer fusion and by callers sizing hop batches.
+    */
+  def fusable(snaps: DataFrame*): Boolean = {
+    val bytes = snapBytes(snaps: _*)
+    bytes > 0L && bytes <= FuseMaxBytes
+  }
 
   private val RunsKind = "pregel-rounds"
   private val PlansKind = "pregel-plan"
@@ -512,7 +523,7 @@ object Pregel {
     graft.SessionCache.recorded(spark, PlansKind)
 
   def apply(vertices: DataFrame, edges: DataFrame): Pregel =
-    new Pregel(vertices, edges, Nil, Nil, Nil, None, 20, false, true, None,
+    new Pregel(vertices, edges, Nil, Nil, Nil, None, 20, true, None,
       None, 1, 1, 4)
 
   /** The sending edge's source-vertex column, inside message expressions. */

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QDef, QModule}
+import org.apache.spark.sql.graft.InternalSnap
 
 /** Byte-pair-encoding token counting — the TOKENIZER grain every real
   * training-data budget is denominated in (whitespace words under-count
@@ -146,7 +147,7 @@ object Bpe extends QModule {
     * corpus size), a 1-row argmax to the driver (the bounds-probe
     * precedent — the learned pair IS driver state, it parameterizes the
     * next plan), and the two-pass-replace merge application from
-    * [[tokenStream]]. The token stream snaps through `Iterate` per
+    * [[tokenStream]]. The token stream snaps through `InternalSnap` per
     * round (lineage stays flat; previous generation released).
     *
     * ALPHABET-COMPLETE (r11): the trainer accepts ANY corpus character,
@@ -189,9 +190,8 @@ object Bpe extends QModule {
     // escape, then split into one delimited unit per corpus char
     // (`(\\.|.)` — an escape pair or a single char)
     val escaped = replace(replace(text, lit("\\"), lit("\\q")), lit("|"), lit("\\p"))
-    var st = graft.operators.Iterate.snap(
-      corpus.select(concat(regexp_replace(escaped, "(\\\\.|.)", "|$1"), lit("|")).as("st")),
-      reliable = false)
+    var st = InternalSnap.snap(
+      corpus.select(concat(regexp_replace(escaped, "(\\\\.|.)", "|$1"), lit("|")).as("st")))
     val merges = Seq.newBuilder[(Int, String, String)]
     for (k <- 1 to iters) {
       val top = st
@@ -210,15 +210,14 @@ object Bpe extends QModule {
         .limit(1).head()
       val (l, r) = (top.getString(0), top.getString(1))
       val prev = st
-      st = graft.operators.Iterate.snap(
+      st = InternalSnap.snap(
         st.select(
           replace(replace(col("st"), lit(s"|$l|$r|"), lit(s"|$l$r|")),
-            lit(s"|$l|$r|"), lit(s"|$l$r|")).as("st")),
-        reliable = false)
-      prev.unpersist()
+            lit(s"|$l|$r|"), lit(s"|$l$r|")).as("st")))
+      InternalSnap.free(prev)
       merges += ((k, unescape(l), unescape(r)))
     }
-    st.unpersist()
+    InternalSnap.free(st)
     merges.result().toDF("rank", "l", "r")
   }
 

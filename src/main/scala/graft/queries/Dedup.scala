@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QDef, QModule}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InternalSnap
 
 /** Deduplication operators for the training-data pipeline (builder brief):
   * exact, normalized-fingerprint, MinHash+LSH near-dup candidates, SimHash,
@@ -143,7 +144,7 @@ object Dedup extends QModule {
     s"bands AS ($parts)"
   }
 
-  /** Plan-visibility seam (r11): the near-dup queries localCheckpoint
+  /** Plan-visibility seam (r11): the near-dup queries snap
     * their tiny intermediates (candidate pairs, candidate shingle sets)
     * so downstream references stop replaying the lineage — which also
     * removes those subtrees from the FINAL executed plan the
@@ -156,7 +157,7 @@ object Dedup extends QModule {
   private val PartsKind = "dedup-part"
   private def snapPart(tag: String, df: DataFrame): DataFrame = {
     graft.SessionCache.record(df.sparkSession, PartsKind, tag, df)
-    df.localCheckpoint()
+    InternalSnap.snap(df)
   }
 
   /** This session's recorded pre-checkpoint frames, by tag. */

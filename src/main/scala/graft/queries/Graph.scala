@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InternalSnap
 
 import graft.{QDef, QModule}
 import graft.operators.Pregel
@@ -69,18 +70,17 @@ object Graph extends QModule {
         cents(col("o_totalprice")).as("w"))
       val seq = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate"), col("o_orderkey"))
-      // ONE window pass, localCheckpointed (r11): vertices, edges AND the
+      // ONE window pass, snapped (r11): vertices, edges AND the
       // diameter probe all derive from the same succession window, which
       // previously ran once per consumer (vertices snap, edges snap, probe
       // scan — three corpus passes). The checkpoint is O(|orders|) narrow
       // rows; the probe becomes a max() over its blocks (max rn per
       // customer IS the chain length), not a separate scan+aggregate job.
-      val chain = o.select(
+      val chain = InternalSnap.snap(o.select(
         col("o_orderkey"), col("o_custkey"), col("w"),
         row_number().over(seq).as("rn"),
         lead(col("o_orderkey"), 1).over(seq).as("nk"),
-        lead(col("w"), 1).over(seq).as("nw"))
-        .localCheckpoint()
+        lead(col("w"), 1).over(seq).as("nw")))
       // diameter probe: 1-row read over the checkpointed chain
       val maxChain = chain.agg(max("rn")).head().getInt(0).toLong
       // Hop sizing (r12): a floor of 4 engages when the graph's blocks
@@ -88,19 +88,15 @@ object Graph extends QModule {
       // snap) then trade cheap block re-reads for saved per-round floors
       // (sf0.1: 24 supersteps → 7; fuse-knee measured k=3 4.25 s, k=4
       // 4.10 s, k=6 7.1 s — 2^k plan growth; unfused 5.4 s). The floor
-      // is gated on the EXACT checkpointed chain bytes with the same
-      // threshold Pregel's own fuse gate uses, because at big state the
+      // is gated on the EXACT checkpointed chain bytes by Pregel's own
+      // fuse gate (Pregel.fusable), because at big state the
       // re-reads invert the trade (×10, 184 MB blocks: fused 133 s vs
       // per-layer 100 s — measured both ways); big graphs keep the r11
       // ⌈d/30⌉ sizing (×10 ≈ 240 → k=8, ~31 supersteps, per-layer
       // snapped). Raising the floor is the MONOTONE-relaxation opt-in
       // (extra post-fixpoint layers are no-ops for least/min folds);
       // Pregel cannot auto-raise it for arbitrary programs.
-      val chainBytes =
-        org.apache.spark.sql.graft.InternalSnap.snappedStorageBytes(chain)
-      val fuseMax = s.conf
-        .get("spark.graft.pregel.fuseMaxBytes", (48L << 20).toString).toLong
-      val floor = if (chainBytes > 0 && chainBytes <= fuseMax) 4L else 1L
+      val floor = if (Pregel.fusable(chain)) 4L else 1L
       val hop = math.min(64L,
         math.max(math.min(floor, math.max(1L, maxChain)), (maxChain + 29) / 30)).toInt
       val vertices = chain.select(
@@ -153,12 +149,11 @@ object Graph extends QModule {
   val qGraphCc = QDef(
     "q_graph_cc",
     (s, d) => {
-      // localCheckpoint: the verified-pairs frame is tiny (LSH-verified
+      // snapped: the verified-pairs frame is tiny (LSH-verified
       // near-dup pairs) but its lineage is the whole minhash→band→verify
       // pipeline, which the four references below (vertices union ×2,
       // edges union ×2) would otherwise replay (r11).
-      val pairs = Dedup.qDedupJaccard.fn(s, d).select("a_id", "b_id")
-        .localCheckpoint()
+      val pairs = InternalSnap.snap(Dedup.qDedupJaccard.fn(s, d).select("a_id", "b_id"))
       val vertices = pairs.select(col("a_id").as("id"))
         .union(pairs.select(col("b_id"))).distinct()
       val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
@@ -208,17 +203,12 @@ object Graph extends QModule {
     (s, d) => {
       val seq = Window.partitionBy("o_custkey")
         .orderBy(col("o_orderdate"), col("o_orderkey"))
-      // ONE window pass, localCheckpointed — vertices and edges both
+      // ONE window pass, snapped — vertices and edges both
       // derive from it (the qGraphSssp pattern, r11).
-      val chain = t(s, d, "orders")
+      val chain = InternalSnap.snap(t(s, d, "orders")
         .select(col("o_orderkey"),
-          lead(col("o_orderkey"), 1).over(seq).as("nk"))
-        .localCheckpoint()
-      val chainBytes =
-        org.apache.spark.sql.graft.InternalSnap.snappedStorageBytes(chain)
-      val fuseMax = s.conf
-        .get("spark.graft.pregel.fuseMaxBytes", (48L << 20).toString).toLong
-      val rankHop = if (chainBytes > 0 && chainBytes <= fuseMax) 4 else 1
+          lead(col("o_orderkey"), 1).over(seq).as("nk")))
+      val rankHop = if (Pregel.fusable(chain)) 4 else 1
       val vertices = chain.select(col("o_orderkey").as("id"))
       val edges = chain.select(
         col("o_orderkey").as("src"), col("nk").as("dst"))
@@ -457,7 +447,7 @@ object Graph extends QModule {
     * the checkpointed table) — O(n log n) total work, O(log n) shuffles,
     * vs Θ(cycle length) rounds for naive walking (the same doubling-vs-
     * propagation trade as [[graft.operators.Components.starContract]]).
-    * Each round snaps through [[graft.operators.Iterate]] so stats can't
+    * Each round snaps through `InternalSnap` so stats can't
     * square across the self-join and lineage stays flat. The DuckDB
     * oracle runs the same doubling at FIXED K=24 (2^24 ≥ any fixture;
     * outputs are K-invariant above the threshold) via MATERIALIZED CTEs;
@@ -472,19 +462,19 @@ object Graph extends QModule {
         val f0 = s.sql(cycleGraphSql)
         val n = f0.count() // exact round count: one tiny job, once per (session, dir)
         val k = 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1)) + 1
-        var cur = graft.operators.Iterate.snap(
+        var cur = InternalSnap.snap(
           f0.select(col("v"), col("succ").as("p"),
-            least(col("v"), col("succ")).as("mn")), reliable = false)
+            least(col("v"), col("succ")).as("mn")))
         val trail = scala.collection.mutable.ArrayBuffer[DataFrame](cur)
         for (_ <- 1 to k.toInt) {
           val b = cur.select(col("v").as("v2"), col("p").as("p2"), col("mn").as("mn2"))
-          cur = graft.operators.Iterate.snap(
+          cur = InternalSnap.snap(
             cur.join(b, col("p") === col("v2"))
               .select(col("v"), col("p2").as("p"),
-                least(col("mn"), col("mn2")).as("mn")), reliable = false)
+                least(col("mn"), col("mn2")).as("mn")))
           trail += cur
         }
-        trail.dropRight(1).foreach(_.unpersist())
+        trail.dropRight(1).foreach(InternalSnap.free)
         cur
       }
       val core = ptr.select(col("v").as("v2"), col("mn").as("mn2"))
@@ -561,14 +551,13 @@ object Graph extends QModule {
         // dedup, no distinct-aggregate machinery.
         val li = graft.Tables.fanOut(graft.Tables.load(s, d, "lineitem"))
           .select(col("l_orderkey").as("ok"), col("l_partkey").as("a"))
-        val e0 = li.hint("shuffle_hash")
+        val e0 = InternalSnap.snap(li.hint("shuffle_hash")
           .join(li.select(col("ok").as("ok2"), col("a").as("b")),
             col("ok") === col("ok2") && col("a") < col("b"))
           .select("a", "b", "ok").distinct()
           .groupBy("a", "b").agg(count(lit(1)).as("nord"))
           .where(col("nord") >= 2)
-          .select("a", "b")
-          .localCheckpoint()
+          .select("a", "b"))
         e0.select(col("a").as("u"), col("b").as("v"))
           .unionAll(e0.select(col("b").as("u"), col("a").as("v")))
           .persist()

@@ -3,6 +3,7 @@ package graft.queries
 import graft.{QDef, QModule}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InternalSnap
 
 /** Text-analysis operators for the training-data pipeline (builder brief /
   * SURVEY.md §7.5): quality scoring, language-ID heuristic, token
@@ -539,8 +540,8 @@ object Text extends QModule {
     */
   private[queries] def dsirRanked(s: SparkSession, d: String): DataFrame = {
     graft.Tables.register(s, d)
-    val scored = s.sql(
-      s"WITH ${dsirScoredCtes("spark")} SELECT * FROM scored").localCheckpoint()
+    val scored = InternalSnap.snap(s.sql(
+      s"WITH ${dsirScoredCtes("spark")} SELECT * FROM scored"))
     val totals = scored.agg(
       sum("n_grams").cast("long").as("nb"),
       sum(when(col("lang") === "en", col("n_grams")).otherwise(0L))

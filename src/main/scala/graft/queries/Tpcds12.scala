@@ -89,9 +89,9 @@ object Tpcds12 extends QModule {
   private def q44Fn(s: org.apache.spark.sql.SparkSession, d: String) = {
     import org.apache.spark.sql.functions._
     graft.Tables.register(s, d)
-    val rev = s.sql(s"""SELECT l_partkey,
+    val rev = org.apache.spark.sql.graft.InternalSnap.snap(s.sql(s"""SELECT l_partkey,
         ${Exact.usumSql("l_extendedprice * (1 - l_discount)", 4)} AS rev_u
-        FROM lineitem GROUP BY l_partkey""").localCheckpoint()
+        FROM lineitem GROUP BY l_partkey"""))
     // 1-row bounds probe over the checkpointed aggregate (the
     // q_dedup_incremental precedent): literals keep the qualification's
     // THREE consumers (top/bottom lists) from re-planning the totals

@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.InternalSnap
 
 import graft.queries.Dedup
 
@@ -203,16 +204,16 @@ object Admission {
       if (deltaIdx.size >= compactEvery) {
         val (oldBI, oldBS, oldDI, oldDS) = (baseIdx, baseStore, deltaIdx, deltaStore)
         val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-        baseIdx = view(baseIdx, deltaIdx).coalesce(p).localCheckpoint(true)
-        baseStore = view(baseStore, deltaStore).coalesce(p).localCheckpoint(true)
+        baseIdx = InternalSnap.snap(view(baseIdx, deltaIdx).coalesce(p))
+        baseStore = InternalSnap.snap(view(baseStore, deltaStore).coalesce(p))
         deltaIdx = Vector.empty
         deltaStore = Vector.empty
-        oldBI.unpersist(); oldBS.unpersist()
+        InternalSnap.free(oldBI); InternalSnap.free(oldBS)
         oldDI.foreach(_.unpersist()); oldDS.foreach(_.unpersist())
       }
 
     override def close(): Unit = {
-      baseIdx.unpersist(); baseStore.unpersist()
+      InternalSnap.free(baseIdx); InternalSnap.free(baseStore)
       deltaIdx.foreach(_.unpersist()); deltaStore.foreach(_.unpersist())
       deltaIdx = Vector.empty; deltaStore = Vector.empty
       baseIdx = emptyIdx; baseStore = emptyStore

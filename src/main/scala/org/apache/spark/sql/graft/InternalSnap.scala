@@ -12,19 +12,25 @@ import org.apache.spark.sql.execution.{LeafExecNode, LogicalRDD, SparkPlan, Spar
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.functions.col
 
-/** The one file that touches `private[sql]` API (hence the package): a
-  * statistics CAP for checkpointed frames that spawns NO job and NO
-  * row-format conversion.
+/** The one place that materializes or releases a frame, and the one
+  * file that touches `private[sql]` API (hence the package).
   *
-  * `Dataset.checkpoint`/`localCheckpoint` deliberately carry the origin
-  * plan's ESTIMATED `Statistics` through the produced [[LogicalRDD]]
-  * (SPARK-39834) so broadcast decisions survive a checkpoint. In a
-  * driver-loop iterative algorithm that estimate compounds: a round that
-  * references its state twice (a Pregel triplet join, large-star's edge
-  * self-pair) SQUARES the carried `BigInt` every round, so its digit
-  * count DOUBLES per round and by round ~10 the driver grinds Karatsuba
-  * multiplications on numbers with thousands of digits inside
-  * `SizeInBytesOnlyStatsPlanVisitor` (observed: minutes at 15k rows).
+  * Reliability is derived, not passed: a snap is a reliable checkpoint
+  * exactly when `sparkContext.getCheckpointDir` is set, and an
+  * executor-local `localCheckpoint` otherwise (the rule MLlib/GraphX
+  * `PeriodicCheckpointer` and ALS follow).
+  *
+  * Every snap re-roots the checkpoint's `LogicalRDD` leaf with its
+  * carried statistics CAPPED. `Dataset.checkpoint`/`localCheckpoint`
+  * deliberately carry the origin plan's ESTIMATED `Statistics` through
+  * the produced [[LogicalRDD]] (SPARK-39834) so broadcast decisions
+  * survive a checkpoint. In a driver-loop iterative algorithm that
+  * estimate compounds: a round that references its state twice (a
+  * Pregel triplet join, large-star's edge self-pair) SQUARES the carried
+  * `BigInt` every round, so its digit count DOUBLES per round and by
+  * round ~10 the driver grinds Karatsuba multiplications on numbers with
+  * thousands of digits inside `SizeInBytesOnlyStatsPlanVisitor`
+  * (observed: minutes at 15k rows).
   *
   * Two public escape hatches both overshoot:
   *   - `createDataFrame(ck.rdd, schema)` resets stats but pays one extra
@@ -35,7 +41,7 @@ import org.apache.spark.sql.functions.col
   *     broadcast join to a two-exchange shuffle join — one extra AQE
   *     stage job per round (the Components job-count spec caught both).
   *
-  * This shim instead copies the checkpoint's own `LogicalRDD` leaf with
+  * The cap instead copies the checkpoint's own `LogicalRDD` leaf with
   * the carried estimate CAPPED at `Long.MaxValue`: below the cap the
   * estimate is untouched (small state keeps broadcasting, job count
   * unchanged), and the cap bounds the BigInt at 19 digits so squaring
@@ -55,35 +61,58 @@ object InternalSnap {
   private[graft] def registerSnapRdd(id: Int): Unit = snapRddIds.add(id)
   private[graft] def isSnapRdd(id: Int): Boolean = snapRddIds.contains(id)
 
-  /** @return `df` re-rooted on a copy of its `LogicalRDD` leaf whose
-    *         carried statistics are capped at `Long.MaxValue`; returns
-    *         `df` unchanged if its plan is not a bare checkpoint scan.
+  /** Checkpoint `df` — reliable under a checkpoint dir, executor-local
+    * otherwise — and return its bare `LogicalRDD` leaf. A reliable
+    * checkpoint is always eager: a lazy one is never written when the
+    * next eager snap consumes it (`RDD.doCheckpoint` stops at the first
+    * marked RDD it meets).
     */
-  def capOriginStats(df: DataFrame): DataFrame = {
-    val ds = df.asInstanceOf[Dataset[Row]]
-    ds.queryExecution.analyzed match {
-      case l: LogicalRDD =>
-        val s = l.computeStats()
-        val capped = Statistics(
-          sizeInBytes = s.sizeInBytes.min(Cap),
-          rowCount = s.rowCount.map(_.min(Cap)),
-          attributeStats = s.attributeStats,
-          isRuntime = s.isRuntime)
-        Dataset.ofRows(
-          ds.sparkSession,
-          LogicalRDD(l.output, l.rdd, l.outputPartitioning, l.outputOrdering,
-            l.isStreaming, l.stream)(
-            ds.sparkSession, Some(capped), Some(l.constraints)))
-      case _ => df
+  private def checkpoint(df: DataFrame, eager: Boolean): LogicalRDD = {
+    val ck = (if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
+      else df.localCheckpoint(eager)).asInstanceOf[Dataset[Row]]
+    ck.queryExecution.analyzed match {
+      case l: LogicalRDD => l
+      case other =>
+        throw new IllegalStateException(s"checkpoint did not produce a LogicalRDD: $other")
     }
   }
 
-  /** Checkpoint `df` hash-partitioned on `keys` into `n` partitions and
-    * DECLARE that layout on the rebuilt leaf — the piece
-    * `LogicalRDD.fromDataset`'s best-effort capture loses under AQE
-    * (an `AdaptiveSparkPlan`'s partitioning isn't final when the
-    * checkpoint node is built, so every post-checkpoint join re-exchanges
-    * state the loop just placed).
+  /** `l` re-rooted in `target` with `part` declared and its statistics
+    * capped at `Long.MaxValue`.
+    */
+  private def reLeaf(l: LogicalRDD, target: SparkSession, part: Partitioning): DataFrame = {
+    val s = l.computeStats()
+    val capped = Statistics(
+      sizeInBytes = s.sizeInBytes.min(Cap),
+      rowCount = s.rowCount.map(_.min(Cap)),
+      attributeStats = s.attributeStats,
+      isRuntime = s.isRuntime)
+    Dataset.ofRows(
+      target,
+      LogicalRDD(l.output, l.rdd, part, l.outputOrdering, l.isStreaming, l.stream)(
+        target, Some(capped), Some(l.constraints)))
+  }
+
+  /** Materialize `df` and return a frame whose plan is a fresh scan of
+    * the materialized blocks — O(1) lineage, capped stats, no cost beyond
+    * the checkpoint's own job (rows stay in Tungsten format, the
+    * checkpoint's physical partitioning survives for downstream joins).
+    * `eager = false` defers the write to the first action that reads it
+    * (Pregel's layer snap); under a checkpoint dir the snap is eager
+    * regardless.
+    */
+  def snap(df: DataFrame, eager: Boolean = true): DataFrame = {
+    val l = checkpoint(df, eager)
+    reLeaf(l, df.sparkSession.asInstanceOf[SparkSession], l.outputPartitioning)
+  }
+
+  /** [[snap]] with a GUARANTEED hash layout: checkpoint `df` behind an
+    * explicit `repartition(n, keys)` and DECLARE `HashPartitioning(keys,
+    * n)` on the rebuilt leaf — the piece `LogicalRDD.fromDataset`'s
+    * best-effort capture loses under AQE (an `AdaptiveSparkPlan`'s
+    * partitioning isn't final when the checkpoint node is built, so every
+    * post-checkpoint join re-exchanges state the loop just placed). The
+    * iterative loops' "state never moves" contract rests on this.
     *
     * Safe by construction: the explicit `repartition(n, keys)` is a
     * `REPARTITION_BY_NUM` shuffle, which AQE never coalesces and skew-join
@@ -91,37 +120,37 @@ object InternalSnap {
     * when the checkpoint materializes; declaring it merely tells
     * `EnsureRequirements` the truth. (If the child already satisfies the
     * partitioning the optimizer may elide the shuffle — also truthful.)
-    * Stats are capped as in [[capOriginStats]].
+    * The result is planned in `in` when given (a loop session).
     */
-  def snapHashPartitioned(
-      df: DataFrame, keys: Seq[String], n: Int, reliable: Boolean,
+  def snapKeyed(
+      df: DataFrame, keys: Seq[String], n: Int,
       in: Option[org.apache.spark.sql.SparkSession] = None): DataFrame = {
-    val rp = df.repartition(n, keys.map(col): _*)
-    val ck = (if (reliable) rp.checkpoint() else rp.localCheckpoint())
-      .asInstanceOf[Dataset[Row]]
-    val target = in.map(_.asInstanceOf[SparkSession])
-      .getOrElse(ck.sparkSession)
-    ck.queryExecution.analyzed match {
-      case l: LogicalRDD =>
-        val attrs = keys.map(k =>
-          l.output.find(_.name == k).getOrElse(
-            throw new IllegalArgumentException(
-              s"snapHashPartitioned: no output column '$k' in ${l.output}")))
-        val s = l.computeStats()
-        val capped = Statistics(
-          sizeInBytes = s.sizeInBytes.min(Cap),
-          rowCount = s.rowCount.map(_.min(Cap)),
-          attributeStats = s.attributeStats,
-          isRuntime = s.isRuntime)
-        registerSnapRdd(l.rdd.id) // route through SnapScanStrategy (reuse fix)
-        Dataset.ofRows(
-          target,
-          LogicalRDD(l.output, l.rdd, HashPartitioning(attrs, n),
-            l.outputOrdering, l.isStreaming, l.stream)(
-            target, Some(capped), Some(l.constraints)))
-      case other =>
-        throw new IllegalStateException(
-          s"snapHashPartitioned: checkpoint did not produce a LogicalRDD: $other")
+    val l = checkpoint(df.repartition(n, keys.map(col): _*), eager = true)
+    val attrs = keys.map(k =>
+      l.output.find(_.name == k).getOrElse(
+        throw new IllegalArgumentException(
+          s"snapKeyed: no output column '$k' in ${l.output}")))
+    registerSnapRdd(l.rdd.id) // route through SnapScanStrategy (reuse fix)
+    reLeaf(l, in.getOrElse(df.sparkSession).asInstanceOf[SparkSession],
+      HashPartitioning(attrs, n))
+  }
+
+  /** Release `df` now instead of at the ContextCleaner's GC sweep: drop
+    * its cache-manager entry (a `persist`ed frame) and unpersist every
+    * checkpointed `LogicalRDD` leaf under it (`Dataset.unpersist` alone is
+    * a no-op on a snapped frame). An iterative loop that snaps per round
+    * (worse, per hop-batch LAYER) otherwise accumulates every
+    * generation's blocks for the run's lifetime — measured 30 GB of /tmp
+    * block files in one ×100 hop-batched SSSP pass. Only call on frames
+    * whose consumers have fully materialized (the blocks cannot be
+    * recomputed — checkpointing truncated the lineage). Reliable
+    * checkpoint FILES stay in the checkpoint dir; only block storage frees.
+    */
+  def free(df: DataFrame): Unit = {
+    df.unpersist(blocking = false)
+    df.asInstanceOf[Dataset[Row]].queryExecution.analyzed.foreach {
+      case l: LogicalRDD if l.rdd.checkpointData.isDefined => l.rdd.unpersist(blocking = false)
+      case _ => ()
     }
   }
 
@@ -147,28 +176,13 @@ object InternalSnap {
     s
   }
 
-  /** Block-manager bytes of a SNAPPED frame's materialized RDD (0 when
-    * unknown — e.g. a reliable checkpoint, which persists to the
-    * checkpoint dir instead). Driver-side metadata only; no job.
-    */
-  def snappedStorageBytes(df: DataFrame): Long = {
-    val ds = df.asInstanceOf[Dataset[Row]]
-    ds.queryExecution.analyzed match {
-      case l: LogicalRDD =>
-        ds.sparkSession.sparkContext.getRDDStorageInfo
-          .find(_.id == l.rdd.id)
-          .map(i => i.memSize + i.diskSize)
-          .getOrElse(0L)
-      case _ => 0L
-    }
-  }
-
   /** Block-manager bytes of ALL materialized-RDD leaves under `df`'s
     * plan, when EVERY leaf is one (a checkpointed/snapped input) and has
     * known storage — the exact input size of a frame derived from
     * materialized state, available without a job. `None` when any leaf is
-    * a live source (parquet scan, range …) or its blocks are unknown —
-    * callers fall back to optimizer estimates.
+    * a live source (parquet scan, range …) or its blocks are unknown (a
+    * reliable checkpoint lives in the checkpoint dir, not the block
+    * manager) — callers fall back to optimizer estimates.
     */
   def materializedInputBytes(df: DataFrame): Option[Long] = {
     val ds = df.asInstanceOf[Dataset[Row]]
@@ -184,22 +198,6 @@ object InternalSnap {
     }
     if (sizes.forall(_ > 0L)) Some(sizes.sum) else None
   }
-
-  /** Release a dead SNAPPED frame's block-manager storage NOW instead of
-    * waiting for the ContextCleaner's GC sweep: an iterative loop that
-    * snaps per round (worse, per hop-batch LAYER) otherwise accumulates
-    * every generation's blocks for the run's lifetime — measured 30 GB
-    * of /tmp block files in one ×100 hop-batched SSSP pass before this
-    * existed. Only call on frames whose consumers have fully
-    * materialized (the blocks cannot be recomputed — checkpointing
-    * truncated the lineage). Reliable-checkpoint FILES are not deleted
-    * (cheap, rare, and spec runs reuse them); only block storage frees.
-    */
-  def freeSnapped(df: DataFrame): Unit =
-    df.asInstanceOf[Dataset[Row]].queryExecution.analyzed.foreach {
-      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** Canonicalization-safe declared partitioning: Spark's `RDDScanExec`
     * canonicalizes its `output` but NOT the declared `outputPartitioning`
@@ -225,19 +223,12 @@ object InternalSnap {
     * actions run under the caller's own configuration.
     */
   def reRootSnapped(
-      df: DataFrame, session: org.apache.spark.sql.SparkSession): DataFrame = {
-    val target = session.asInstanceOf[SparkSession]
-    val ds = df.asInstanceOf[Dataset[Row]]
-    ds.queryExecution.analyzed match {
+      df: DataFrame, session: org.apache.spark.sql.SparkSession): DataFrame =
+    df.asInstanceOf[Dataset[Row]].queryExecution.analyzed match {
       case l: LogicalRDD =>
-        Dataset.ofRows(
-          target,
-          LogicalRDD(l.output, l.rdd, l.outputPartitioning, l.outputOrdering,
-            l.isStreaming, l.stream)(
-            target, Some(l.computeStats()), Some(l.constraints)))
+        reLeaf(l, session.asInstanceOf[SparkSession], l.outputPartitioning)
       case _ => df
     }
-  }
 }
 
 /** Physical scan for graft-SNAPPED checkpoints — execution-identical to
@@ -248,7 +239,7 @@ object InternalSnap {
   * one snap compare `sameResult` and `ReuseExchangeAndSubquery` can
   * dedupe the identical exchanges above them (see
   * [[InternalSnap.normalizedPart]]). Planned only for RDD ids registered
-  * by [[InternalSnap.snapHashPartitioned]] — every other `LogicalRDD`
+  * by [[InternalSnap.snapKeyed]] — every other `LogicalRDD`
   * keeps stock planning.
   */
 case class SnapScanExec(

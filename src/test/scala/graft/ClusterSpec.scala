@@ -9,6 +9,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.Pregel
+
 /** Closures that ship to REMOTE executor JVMs live on this scalatest-free
   * object: a Scala lambda's implementation method is a static method of
   * its enclosing class, so the executor must be able to load the
@@ -181,5 +183,49 @@ class ClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
       "retried stage produced a wrong sum")
     assert(failures.get() >= 1,
       "injected failure never surfaced — the probe did not run attempt 0")
+  }
+
+  // Registered LAST: a context's checkpoint dir cannot be unset, so every
+  // snap after this test in this JVM is a reliable checkpoint.
+  test("reliable snaps follow setCheckpointDir, hop layers included") {
+    // Executor-local blocks die with their executor; with a checkpoint dir
+    // set, every InternalSnap (Pregel's hop-batch layer snaps included)
+    // must be a reliable checkpoint and compute the same rows.
+    val session = spark
+    import session.implicits._
+    val vs = (0L until 10L).toDF("id")
+    val es = (0L until 9L).map(i => (i, i + 1)).toDF("src", "dst")
+    def flood(): Map[Long, Long] = Pregel(vs, es)
+      .withVertexColumn("cc", col("id"), least(col("cc"), Pregel.msg))
+      .sendMsgToDst(when(Pregel.src("cc") < Pregel.dst("cc"), Pregel.src("cc")))
+      .aggMsgs(min(Pregel.msg))
+      .setMaxIter(15).setHopBatch(3)
+      .setTag("ck-flood")
+      .run().select("id", "cc").as[(Long, Long)].collect().toMap
+    def sssp(): Seq[String] =
+      SparkEntry.queries("q_graph_sssp")(spark, TestSession.sf)
+        .collect().map(_.toString).sorted.toSeq
+    val (localFlood, localSssp) = (flood(), sssp())
+    val dir = java.nio.file.Files.createTempDirectory("graft-ck").toFile
+    def rddDirs(f: java.io.File): Int =
+      Option(f.listFiles()).toSeq.flatten.filter(_.isDirectory).map { c =>
+        (if (c.getName.startsWith("rdd-")) 1 else 0) + rddDirs(c)
+      }.sum
+    try {
+      spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
+      assert(flood() === localFlood, "reliable flood diverged from the local one")
+      // two initial snaps (edges, state), then per superstep two layer
+      // snaps (hop batch 3) and the state snap
+      val rounds = Pregel.lastRuns(spark)("ck-flood").size
+      assert(rddDirs(dir) == 2 + rounds * 3,
+        s"expected ${2 + rounds * 3} rdd-* checkpoints for $rounds supersteps, got ${rddDirs(dir)}")
+      assert(sssp() === localSssp, "q_graph_sssp under reliable snaps diverged")
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
+        f.delete()
+      }
+      rm(dir)
+    }
   }
 }

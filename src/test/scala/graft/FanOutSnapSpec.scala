@@ -53,6 +53,6 @@ class FanOutSnapSpec extends SparkSpecBase {
     val mixed = ck.join(Tables.load(spark, sf, "orders"),
       col("id") === col("o_orderkey"))
     assert(InternalSnap.materializedInputBytes(mixed).isEmpty)
-    InternalSnap.freeSnapped(ck)
+    InternalSnap.free(ck)
   }
 }

@@ -1,0 +1,38 @@
+package graft
+
+import java.io.File
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** `InternalSnap` is the one place that materializes a frame: a direct
+  * `localCheckpoint(` or `.checkpoint(` anywhere else in the main sources
+  * would bypass its stats cap, its release path and the checkpoint-dir
+  * reliability rule. Comments are excluded; the scan needs no Spark.
+  */
+class MaterializeSeamSpec extends AnyFunSuite {
+
+  private def scalaFiles(dir: File): Seq[File] =
+    Option(dir.listFiles()).toSeq.flatten.flatMap { f =>
+      if (f.isDirectory) scalaFiles(f)
+      else if (f.getName.endsWith(".scala")) Seq(f)
+      else Nil
+    }
+
+  /** `src` with block and line comments removed, line structure kept. */
+  private def code(src: String): Seq[String] =
+    """(?s)/\*.*?\*/""".r.replaceAllIn(src, m =>
+      java.util.regex.Matcher.quoteReplacement(m.matched.replaceAll("[^\n]", " ")))
+      .linesIterator.map(_.replaceAll("//.*$", "")).toSeq
+
+  test("only InternalSnap.scala checkpoints a frame") {
+    val root = new File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root (no ${root.getAbsolutePath})")
+    val call = """localCheckpoint\(|\.checkpoint\(""".r
+    val hits = for {
+      f <- scalaFiles(root) if f.getName != "InternalSnap.scala"
+      (line, i) <- code(java.nio.file.Files.readString(f.toPath)).zipWithIndex
+      if call.findFirstIn(line).isDefined
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("materialize through InternalSnap instead:\n", "\n", ""))
+  }
+}

@@ -1139,10 +1139,9 @@ class OperatorSpec extends SparkSpecBase {
     val k = 64 - java.lang.Long.numberOfLeadingZeros(succAdv.size - 1L) + 1
     for (_ <- 1 to k.toInt) {
       val b = cur.select(col("v").as("v2"), col("p").as("p2"), col("mn").as("mn2"))
-      cur = graft.operators.Iterate.snap(
+      cur = org.apache.spark.sql.graft.InternalSnap.snap(
         cur.join(b, col("p") === col("v2"))
-          .select(col("v"), col("p2").as("p"), least(col("mn"), col("mn2")).as("mn")),
-        reliable = false)
+          .select(col("v"), col("p2").as("p"), least(col("mn"), col("mn2")).as("mn")))
     }
     val cyc = cur.select(col("p").as("cv")).distinct()
     val gotAdv = cur
@@ -1260,6 +1259,34 @@ class OperatorSpec extends SparkSpecBase {
       assert(!SessionCache.holds(c) && !Tables.holds(c), s"child session $k outlived clear")
     }
     Tables.clear(ns)
+  }
+
+  test("released snaps leave the block manager: SessionCache.clear and KCore") {
+    // Dataset.unpersist is a no-op on a checkpointed frame, so release
+    // goes through InternalSnap.free: no session's blocks may outlive
+    // SessionCache.clear, and an iterative operator keeps only the
+    // blocks of the frame it returns.
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.graft.InternalSnap
+    import spark.implicits._
+    def stored: Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    def leaves(df: org.apache.spark.sql.DataFrame): Set[Int] =
+      df.queryExecution.analyzed.collectLeaves().collect { case l: LogicalRDD => l.rdd.id }.toSet
+    val ns = spark.newSession()
+    val memo = SessionCache.memo(ns, "spec-snap")(InternalSnap.snap(ns.range(0, 1000).toDF("id")))
+    val memoIds = leaves(memo)
+    assert(memoIds.size == 1 && memoIds.subsetOf(stored), "the memoized snap stored no blocks")
+    SessionCache.clear(ns)
+    assert((memoIds & stored).isEmpty, s"snap blocks ${memoIds & stored} outlived SessionCache.clear")
+
+    val ring = (0L until 6L).flatMap(i => Seq((i, (i + 1) % 6), ((i + 1) % 6, i)))
+    val edges = (ring ++ Seq((0L, 9L), (9L, 0L))).toDF("u", "v")
+    val before = stored
+    val (core, rounds) = operators.KCore.runWithRounds(edges, 2)
+    assert(core.count() == 6 && rounds >= 2)
+    assert(stored -- before == leaves(core),
+      s"KCore left blocks of dead generations: ${(stored -- before) -- leaves(core)}")
+    InternalSnap.free(core)
   }
 
   test("q_dedup_incremental admits nothing from an empty corpus instead of NPE-ing") {

@@ -156,34 +156,33 @@ class PregelSpec extends SparkSpecBase {
     assert(one === Map(0L -> 0L, 1L -> 0L, 2L -> 1L, 3L -> 2L))
   }
 
-  test("reliable checkpointing: same result, real checkpoint files on the fault-tolerant path") {
-    // local blocks die with an executor; a 1000-executor run needs the
-    // HDFS-backed variant. Pin that the reliable path (a) computes the
-    // same fixed point and (b) actually wrote checkpoint data.
-    val dir = java.nio.file.Files.createTempDirectory("pregel-ck").toFile
-    spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
-    try {
-      val vs = (0L until 10L).toDF("id")
-      val es = (0L until 9L).map(i => (i, i + 1)).toDF("src", "dst")
-      def flood(reliable: Boolean) = Pregel(vs, es)
+  test("a non-deterministic message disables layer fusion") {
+    // Fused layers rely on ReuseExchange to evaluate each layer once for
+    // both of its consumers; a layer snap guarantees it (ADVICE r12 #1).
+    // A rand()-gated message (a gate the optimizer cannot fold) must
+    // therefore plan every fused superstep exactly like the per-layer-
+    // snapped one: the same number of checkpoint scans in the recorded
+    // round-2 plan.
+    val vs = (0L until 50L).toDF("id")
+    val es = (0L until 49L).map(i => (i, i + 1)).toDF("src", "dst")
+    def planFor(t: String, fuse: Int): String = {
+      Pregel(vs, es)
         .withVertexColumn("cc", col("id"), least(col("cc"), Pregel.msg))
-        .sendMsgToDst(when(Pregel.src("cc") < Pregel.dst("cc"), Pregel.src("cc")))
+        .sendMsgToDst(when(rand(7) < 0.9, Pregel.src("cc")))
         .aggMsgs(min(Pregel.msg))
-        .setMaxIter(15)
-        .setReliableCheckpoint(reliable)
-        .run().select("id", "cc").as[(Long, Long)].collect().toMap
-      assert(flood(reliable = true) === flood(reliable = false))
-      def count(f: java.io.File): Int =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.map(count).sum
-        else 1
-      assert(count(dir) > 0, "reliable run wrote no checkpoint files")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-        f.delete()
-      }
-      rm(dir)
+        .setMaxIter(3).setRequireConverged(false)
+        .setHopBatch(4).setLayerFuse(fuse)
+        .setTag(t)
+        .run().write.format("noop").mode("overwrite").save()
+      Pregel.lastPlans(spark)(t)
     }
+    def scans(plan: String): Int = plan.linesIterator.count(l =>
+      l.contains("GraftSnapScan") || l.contains("Scan ExistingRDD"))
+    val fused = planFor("spec-nondet-fuse4", 4)
+    val snapped = planFor("spec-nondet-fuse1", 1)
+    assert(scans(snapped) > 0, s"no checkpoint scans recognized:\n$snapped")
+    assert(scans(fused) == scans(snapped),
+      s"non-deterministic layers were fused:\n$fused\nvs per-layer snapped:\n$snapped")
   }
 
   test("triplet-field pruning and the steady-state superstep plan contract") {
