@@ -24,6 +24,23 @@ import org.apache.spark.sql.SparkSession
 object Engine {
   val DefaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
+  /** The `file:` scheme on the fork-free local filesystem (LocalFs.scala),
+    * for both Hadoop APIs: `FileSystem` (RocksDB file copies, parquet
+    * writers) and `FileContext` (Spark's checkpoint file manager; stock
+    * `RawLocalFs` hard-codes its own `RawLocalFileSystem`, so the first
+    * key alone does not reach it). Without Hadoop's native library, every
+    * atomic checkpoint write forked one `chmod` and four `readlink`s, twice
+    * for state files with their checksum sidecar, on the driver's offset
+    * and commit logs and in all 8 RocksDB commits of each batch. A JFR
+    * recording of one perfbench `stream` run (seed 43, 4-core VM, 25
+    * batches) counted 5,533 process starts (3,752 `readlink`, 1,350
+    * `chmod`, 428 `rm`); with these keys, 617 in 37 batches: 614 `rm -rf`
+    * from Spark's own recursive deletes and three one-time probes.
+    */
+  val LocalFsConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[ForkFreeLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[ForkFreeLocalFs].getName)
+
   def builder(
       appName: String = "graft",
       master: String = s"local[$DefaultCpus]",
@@ -68,6 +85,8 @@ object Engine {
       // small and the cap still bounds a pathological generator.
       .config("spark.sql.codegen.cache.maxEntries", "5000")
       .config("spark.ui.enabled", "false")
+      // file: without per-file shell-outs; why and the fork counts: LocalFsConf
+      .config(LocalFsConf)
 
   def session(appName: String = "graft"): SparkSession = {
     val spark = builder(appName).getOrCreate()

@@ -84,6 +84,9 @@ class ClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.speculation.quantile", "0.2")
       .config("spark.speculation.minTaskRuntime", "100ms")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      .config(Engine.LocalFsConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.sparkContext.addSparkListener(new SparkListener {
@@ -183,6 +186,16 @@ class ClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
       "retried stage produced a wrong sum")
     assert(failures.get() >= 1,
       "injected failure never surfaced — the probe did not run attempt 0")
+  }
+
+  test("RocksDB state commits in executor JVMs on the fork-free local filesystem equal batch") {
+    // Every state-store commit runs in an executor process, which builds its
+    // own Hadoop configuration: a class the executors could not load would
+    // fail the first commit.
+    val dir = java.nio.file.Files.createTempDirectory("graft-cluster-stream")
+    val in = java.nio.file.Files.createDirectory(dir.resolve("in")).toUri.toString
+    val got = StreamingSpec.runFileStream(spark, in, dir.resolve("ckpt").toUri.toString, 0 until 2)
+    assert(got.nonEmpty && got == StreamingSpec.counts(StreamingSpec.dedupCounts(spark.read.parquet(in))))
   }
 
   // Registered LAST: a context's checkpoint dir cannot be unset, so every

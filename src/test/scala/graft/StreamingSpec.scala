@@ -1040,6 +1040,30 @@ class StreamingSpec extends SparkSpecBase {
     assert(want.count(_._1._2 == 3) > 0, "fixture should complete some funnels")
   }
 
+  test("dedup into 5 s windows on RocksDB restarts from its checkpoint: equals batch, checksums kept") {
+    // perfbench's stream shape under the fork-free local filesystem: 3
+    // batches, stop, restart from the same checkpoint, 2 more. The restart
+    // reloads every state store from its committed zip and verifies it
+    // against Spark's checksum sidecar.
+    import java.nio.file.Files
+    val in = Files.createTempDirectory("graft-restart-in").toUri.toString
+    val ckptDir = Files.createTempDirectory("graft-restart-ckpt")
+    val first = StreamingSpec.runFileStream(spark, in, ckptDir.toUri.toString, 0 until 3)
+    val second = StreamingSpec.runFileStream(spark, in, ckptDir.toUri.toString, 3 until 5)
+    val got = first ++ second
+    val want = StreamingSpec.counts(StreamingSpec.dedupCounts(spark.read.parquet(in)))
+    assert(want.size == 5 * 5, s"fixture should fill 5 windows x 5 types: ${want.size}")
+    assert(got == want, s"restarted stream diverged from batch: ${(got.toSet diff want.toSet).take(5)}")
+    // 2 stateful operators x 4 shuffle partitions, each with a committed zip
+    // per batch that wrote state
+    import scala.jdk.CollectionConverters._
+    val zips = Files.walk(ckptDir.resolve("state")).iterator().asScala
+      .filter(p => p.getFileName.toString.matches("\\d+\\.zip")).toSeq
+    assert(zips.map(_.getParent).distinct.size == 2 * 4, s"state partitions with zips: ${zips.map(_.getParent).distinct}")
+    val bare = zips.filterNot(z => Files.exists(z.resolveSibling(z.getFileName.toString + ".crc")))
+    assert(bare.isEmpty, s"committed state zips without a checksum sidecar: $bare")
+  }
+
   test("state data source reads checkpointed streaming state offline (state-metadata + statestore)") {
     // The ops surface for debugging a deployed stateful pipeline: after
     // the query stops, its checkpoint remains queryable as BATCH tables —
@@ -1088,4 +1112,55 @@ object StreamingSpec {
     * the test observe the same set (local mode = one JVM).
     */
   val foreachSeen = java.util.concurrent.ConcurrentHashMap.newKeySet[Long]()
+
+  /** perfbench's `stream` pipeline: dedup re-deliveries under a 10 s
+    * watermark, then 5 s tumbling counts and sums per event type.
+    */
+  def dedupCounts(events: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    Streams.dedupStream(events, "10 seconds")
+      .groupBy(window(col("ts"), "5 seconds"), col("event_type"))
+      .agg(count(lit(1)).as("cnt"), sum(col("value")).as("total"))
+      .select(col("window.start").as("ws"), col("event_type"), col("cnt"), col("total"))
+
+  type Counts = Map[(Long, String), (Long, Double)]
+
+  def counts(df: org.apache.spark.sql.DataFrame): Counts =
+    df.collect().map(r => (r.getTimestamp(0).getTime, r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
+
+  /** Input file `b`: events `200b .. 200b+199`, 40 per second of event time
+    * from 2024-01-01, each delivered twice, plus the previous file's last
+    * 20 again (cross-batch duplicates, still inside the watermark).
+    */
+  def eventFile(b: Int): Seq[Event] = {
+    val types = Seq("click", "error", "purchase", "signup", "view")
+    def ev(id: Long) = Event(id, new Timestamp(1704067200000L + id / 40 * 1000), id % 1000,
+      types((id % types.size).toInt), (id % 100).toDouble)
+    val fresh = (200L * b until 200L * (b + 1)).map(ev)
+    fresh ++ fresh ++ (200L * b - 20 until 200L * b).filter(_ >= 0).map(ev)
+  }
+
+  /** Runs [[dedupCounts]] in update mode on the RocksDB store over the
+    * parquet files under `in`, checkpointed at `ckpt`: writes each of
+    * `files` as one parquet file and lets it commit as its own micro-batch,
+    * then stops. Returns the latest row per (window, type) it emitted.
+    */
+  def runFileStream(spark: org.apache.spark.sql.SparkSession, in: String, ckpt: String,
+      files: Seq[Int]): Counts = {
+    val enc = org.apache.spark.sql.Encoders.product[Event]
+    val latest = new java.util.concurrent.ConcurrentHashMap[(Long, String), (Long, Double)]()
+    val q = dedupCounts(spark.readStream.schema(enc.schema).parquet(in))
+      .writeStream.outputMode(OutputMode.Update)
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        counts(b).foreach { case (k, v) => latest.put(k, v) }
+      }
+      .start()
+    try files.foreach { b =>
+      spark.createDataset(eventFile(b))(enc).coalesce(1).write.mode("append").parquet(in)
+      q.processAllAvailable()
+    } finally q.stop()
+    q.exception.foreach(e => throw e)
+    import scala.jdk.CollectionConverters._
+    latest.asScala.toMap
+  }
 }
