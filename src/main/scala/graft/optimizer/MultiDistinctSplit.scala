@@ -50,9 +50,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * COUNT (the only non-nullable default this rule knows is 0). Output
   * attributes keep their exprIds, names, types, and nullability.
   *
-  * Cost fences: the child must be scan-shaped (Project/Filter over a
-  * leaf) — re-computing an arbitrary join/aggregate subtree once per leg
-  * could dwarf the Expand saving; and (auto mode) the child's estimated
+  * Cost fences: the child must be scan-shaped (deterministic
+  * Project/Filter over a leaf; every leg re-evaluates the child, so a
+  * `rand()` there would give each leg different rows) — re-computing an
+  * arbitrary join/aggregate subtree once per leg could dwarf the Expand
+  * saving; and (auto mode) the child's estimated
   * size must reach `minBytes` (default 256 MiB, measured: on the ×10
   * fixture — pruned estimate ~25-50 MB — the split LOSES ~40% to the
   * extra scans, on ×100 — pruned estimate 256-512 MB — it WINS ~10%, so
@@ -81,8 +83,8 @@ object MultiDistinctSplit extends Rule[LogicalPlan] {
 
   private def scanShaped(p: LogicalPlan): Boolean = p match {
     case _: LeafNode => true
-    case Project(_, c) => scanShaped(c)
-    case Filter(_, c) => scanShaped(c)
+    case Project(ps, c) => ps.forall(_.deterministic) && scanShaped(c)
+    case Filter(f, c) => f.deterministic && scanShaped(c)
     case _ => false
   }
 

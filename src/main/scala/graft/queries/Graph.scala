@@ -209,6 +209,8 @@ object Graph extends QModule {
         .select(col("o_orderkey"),
           lead(col("o_orderkey"), 1).over(seq).as("nk")))
       val rankHop = if (Pregel.fusable(chain)) 4 else 1
+      // supersteps × hopBatch must be exactly PrIter layers (setMaxIter below)
+      require(PrIter % rankHop == 0, s"$PrIter layers do not split into hops of $rankHop")
       val vertices = chain.select(col("o_orderkey").as("id"))
       val edges = chain.select(
         col("o_orderkey").as("src"), col("nk").as("dst"))

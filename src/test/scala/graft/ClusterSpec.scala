@@ -84,8 +84,7 @@ class ClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.speculation.quantile", "0.2")
       .config("spark.speculation.minTaskRuntime", "100ms")
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      .config(Engine.StateStoreConf)
       .config(Engine.LocalFsConf)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -194,7 +193,7 @@ class ClusterSpec extends AnyFunSuite with BeforeAndAfterAll {
     // fail the first commit.
     val dir = java.nio.file.Files.createTempDirectory("graft-cluster-stream")
     val in = java.nio.file.Files.createDirectory(dir.resolve("in")).toUri.toString
-    val got = StreamingSpec.runFileStream(spark, in, dir.resolve("ckpt").toUri.toString, 0 until 2)
+    val got = StreamingSpec.runFileStream(spark, in, dir.resolve("ckpt").toUri.toString, 0 until 2).counts
     assert(got.nonEmpty && got == StreamingSpec.counts(StreamingSpec.dedupCounts(spark.read.parquet(in))))
   }
 

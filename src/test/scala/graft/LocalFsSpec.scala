@@ -94,7 +94,7 @@ class LocalFsSpec extends SparkSpecBase {
     rec.enable("jdk.ProcessStart").withStackTrace()
     rec.start()
     val got = try {
-      val got = StreamingSpec.runFileStream(spark, in, dir.resolve("ckpt").toUri.toString, 0 until 3)
+      val got = StreamingSpec.runFileStream(spark, in, dir.resolve("ckpt").toUri.toString, 0 until 3).counts
       spark.range(1000).selectExpr("id", "id % 7 AS k").write.parquet(dir.resolve("out").toUri.toString)
       got
     } finally rec.stop()
@@ -109,6 +109,11 @@ class LocalFsSpec extends SparkSpecBase {
       s"by command: ${byCommand.toSeq.sorted.mkString(", ")}")
     assert(shell.size == 0, s"${shell.size} Hadoop Shell process starts, e.g. " +
       shell.take(3).map(_.getString("command")).mkString("; "))
+    // changelog checkpointing (Engine.StateStoreConf) takes RocksDB's
+    // per-commit local snapshot and its `rm -rf`s off the 24 state commits;
+    // one snapshot per commit would read 48 or more
+    val rm = byCommand.getOrElse("rm", 0)
+    assert(rm <= 16, s"$rm rm starts: a RocksDB commit is snapshotting again")
     assert(got == StreamingSpec.counts(StreamingSpec.dedupCounts(spark.read.parquet(in))))
     assert(FileSystem.get(URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
       .isInstanceOf[ForkFreeLocalFileSystem])

@@ -11,8 +11,9 @@ import graft.optimizer.MultiDistinctSplit
   * (which the fixed point further rewrites via DistinctThenCount /
   * BitmapDistinct), bit-exact against the stock plan including null
   * keys, null group keys, composite keys, and companions; it fences on
-  * non-scan children; and in auto mode the fixture stays on the stock
-  * plan (the size gate, the q_agg_distinct_auto posture).
+  * non-scan and non-deterministic children; and in auto mode the fixture
+  * stays on the stock plan (the size gate, the q_agg_distinct_auto
+  * posture).
   */
 class MultiDistinctSplitSpec extends SparkSpecBase {
 
@@ -102,5 +103,24 @@ class MultiDistinctSplitSpec extends SparkSpecBase {
     val p2 = planOf(aggDistinct)
     assert(p2.contains("Expand") && !p2.contains("Union"),
       s"auto mode fired below the size gate:\n$p2")
+  }
+
+  test("fences: a rand() child keeps the stock plan under force, rule-off rows") {
+    // every leg re-evaluates the child, so a non-deterministic Project or
+    // Filter would give each leg its own rows. A Range leaf: over a
+    // LocalRelation the optimizer evaluates rand() away before the rule runs
+    val base = spark.range(400).selectExpr("id % 3 AS g", "id % 17 AS k1", "id % 29 AS k2")
+    def projected = base.withColumn("r", (rand(7) * 5).cast("long"))
+      .groupBy("g").agg(countDistinct(col("k1")).as("d1"), countDistinct(col("r")).as("dr"))
+    def filtered = base.where(rand(11) < 0.5)
+      .groupBy("g").agg(countDistinct(col("k1")).as("d1"), countDistinct(col("k2")).as("d2"))
+    for ((name, df) <- Seq("project" -> (() => projected), "filter" -> (() => filtered))) {
+      val off = withConf(MultiDistinctSplit.ModeKey -> "off")(rows(df()))
+      withConf(MultiDistinctSplit.ModeKey -> "force") {
+        val p = planOf(df())
+        assert(p.contains("Expand") && !p.contains("Union"), s"split fired over a rand() $name:\n$p")
+        assert(rows(df()) == off, s"rand() $name: force rows differ from rule-off rows")
+      }
+    }
   }
 }

@@ -707,6 +707,7 @@ class OperatorSpec extends SparkSpecBase {
     assert(c.get("spark.sql.adaptive.enabled") == "true")
     assert(c.get("spark.sql.adaptive.skewJoin.enabled") == "true")
     assert(c.get("spark.sql.streaming.stateStore.providerClass").contains("RocksDB"))
+    assert(c.get("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled") == "true")
     assert(c.get("spark.sql.session.timeZone") == "UTC")
   }
 

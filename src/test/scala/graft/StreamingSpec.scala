@@ -1041,27 +1041,54 @@ class StreamingSpec extends SparkSpecBase {
   }
 
   test("dedup into 5 s windows on RocksDB restarts from its checkpoint: equals batch, checksums kept") {
-    // perfbench's stream shape under the fork-free local filesystem: 3
-    // batches, stop, restart from the same checkpoint, 2 more. The restart
-    // reloads every state store from its committed zip and verifies it
+    // perfbench's stream shape under the engine's state store conf: 3
+    // batches, stop, restart from the same checkpoint, 2 more. Commits write
+    // changelogs only (no snapshot is due before version 10), so the
+    // restart rebuilds every state store by replaying them, each verified
     // against Spark's checksum sidecar.
     import java.nio.file.Files
     val in = Files.createTempDirectory("graft-restart-in").toUri.toString
     val ckptDir = Files.createTempDirectory("graft-restart-ckpt")
     val first = StreamingSpec.runFileStream(spark, in, ckptDir.toUri.toString, 0 until 3)
     val second = StreamingSpec.runFileStream(spark, in, ckptDir.toUri.toString, 3 until 5)
-    val got = first ++ second
+    val got = first.counts ++ second.counts
     val want = StreamingSpec.counts(StreamingSpec.dedupCounts(spark.read.parquet(in)))
     assert(want.size == 5 * 5, s"fixture should fill 5 windows x 5 types: ${want.size}")
     assert(got == want, s"restarted stream diverged from batch: ${(got.toSet diff want.toSet).take(5)}")
-    // 2 stateful operators x 4 shuffle partitions, each with a committed zip
-    // per batch that wrote state
-    import scala.jdk.CollectionConverters._
-    val zips = Files.walk(ckptDir.resolve("state")).iterator().asScala
-      .filter(p => p.getFileName.toString.matches("\\d+\\.zip")).toSeq
-    assert(zips.map(_.getParent).distinct.size == 2 * 4, s"state partitions with zips: ${zips.map(_.getParent).distinct}")
-    val bare = zips.filterNot(z => Files.exists(z.resolveSibling(z.getFileName.toString + ".crc")))
-    assert(bare.isEmpty, s"committed state zips without a checksum sidecar: $bare")
+    // 2 stateful operators x 4 shuffle partitions, each with a committed
+    // changelog per batch that wrote state
+    val logs = StreamingSpec.stateFiles(ckptDir, "changelog")
+    assert(logs.map(_.getParent).distinct.size == 2 * 4, s"state partitions with changelogs: ${logs.map(_.getParent).distinct}")
+    val bare = logs.filterNot(z => Files.exists(z.resolveSibling(z.getFileName.toString + ".crc")))
+    assert(bare.isEmpty, s"committed changelogs without a checksum sidecar: $bare")
+    // the first batch the restarted query ran (an idle trigger reports no
+    // state operators); the aggregation's save store reuses the version its
+    // restore store loaded, so the replays show on one operator
+    val replayed = second.progress.find(_.stateOperators.nonEmpty).toSeq.flatMap(_.stateOperators)
+      .map(_.customMetrics.get("rocksdbNumReplayChangelogFiles").longValue).sum
+    assert(replayed > 0, "the restarted query rebuilt its state without replaying a changelog")
+  }
+
+  test("RocksDB checkpoints restart across the changelog switch, both directions: equals batch") {
+    // checkpoints written before changelog checkpointing became the default
+    // hold only snapshot zips; a store must load either format
+    import java.nio.file.Files
+    def session(changelog: Boolean) = {
+      val s = spark.newSession()
+      s.conf.set("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", changelog.toString)
+      s
+    }
+    for (changelogFirst <- Seq(false, true)) {
+      val in = Files.createTempDirectory("graft-switch-in").toUri.toString
+      val ckptDir = Files.createTempDirectory("graft-switch-ckpt")
+      val first = StreamingSpec.runFileStream(session(changelogFirst), in, ckptDir.toUri.toString, 0 until 3)
+      val (zips, logs) = (StreamingSpec.stateFiles(ckptDir, "zip"), StreamingSpec.stateFiles(ckptDir, "changelog"))
+      assert(if (changelogFirst) zips.isEmpty && logs.nonEmpty else zips.nonEmpty && logs.isEmpty,
+        s"changelog=$changelogFirst wrote ${zips.size} zips, ${logs.size} changelogs")
+      val second = StreamingSpec.runFileStream(session(!changelogFirst), in, ckptDir.toUri.toString, 3 until 5)
+      val want = StreamingSpec.counts(StreamingSpec.dedupCounts(spark.read.parquet(in)))
+      assert(first.counts ++ second.counts == want, s"changelog $changelogFirst -> ${!changelogFirst} diverged from batch")
+    }
   }
 
   test("state data source reads checkpointed streaming state offline (state-metadata + statestore)") {
@@ -1124,6 +1151,11 @@ object StreamingSpec {
 
   type Counts = Map[(Long, String), (Long, Double)]
 
+  /** What [[runFileStream]] saw: the latest row per (window, type) and the
+    * query's progress reports, oldest first.
+    */
+  case class FileRun(counts: Counts, progress: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress])
+
   def counts(df: org.apache.spark.sql.DataFrame): Counts =
     df.collect().map(r => (r.getTimestamp(0).getTime, r.getString(1)) -> (r.getLong(2), r.getDouble(3))).toMap
 
@@ -1142,10 +1174,10 @@ object StreamingSpec {
   /** Runs [[dedupCounts]] in update mode on the RocksDB store over the
     * parquet files under `in`, checkpointed at `ckpt`: writes each of
     * `files` as one parquet file and lets it commit as its own micro-batch,
-    * then stops. Returns the latest row per (window, type) it emitted.
+    * then stops.
     */
   def runFileStream(spark: org.apache.spark.sql.SparkSession, in: String, ckpt: String,
-      files: Seq[Int]): Counts = {
+      files: Seq[Int]): FileRun = {
     val enc = org.apache.spark.sql.Encoders.product[Event]
     val latest = new java.util.concurrent.ConcurrentHashMap[(Long, String), (Long, Double)]()
     val q = dedupCounts(spark.readStream.schema(enc.schema).parquet(in))
@@ -1161,6 +1193,13 @@ object StreamingSpec {
     } finally q.stop()
     q.exception.foreach(e => throw e)
     import scala.jdk.CollectionConverters._
-    latest.asScala.toMap
+    FileRun(latest.asScala.toMap, q.recentProgress.toSeq)
+  }
+
+  /** Committed RocksDB state files `N.<ext>` under a checkpoint. */
+  def stateFiles(ckpt: java.nio.file.Path, ext: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(ckpt.resolve("state")).iterator().asScala
+      .filter(p => p.getFileName.toString.matches(s"\\d+\\.$ext")).toSeq
   }
 }
