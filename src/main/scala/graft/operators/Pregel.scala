@@ -51,14 +51,14 @@ import org.apache.spark.sql.graft.InternalSnap
   * per-reducer fan-in at the map-task count for the constant-state
   * aggregates the model uses, and [[setMessageSalt]] adds a two-level
   * (id, salt) pre-fold for the regimes where that bound is weak (both
-  * measured on a star graph — see PregelSpec/StarProbe). A vertex with
-  * huge OUT-degree concentrates its edge rows in one partition of the
-  * src-keyed layout, so one task computes that vertex's triplets; for
-  * undirected algorithms, symmetrizing edges and reading src-state only
-  * (the q_graph_cc pattern) halves the exposure, and GraphX-style 2D
-  * edge partitioning (state replicated √P ways) is the known trade if a
-  * single out-hub ever dominates — deliberately not paid by default
-  * because it re-ships state every round for every graph.
+  * measured on a star graph — PregelSpec; BASELINE.md r10 star-graph
+  * numbers). A vertex with huge OUT-degree concentrates its edge rows in
+  * one partition of the src-keyed layout, so one task computes that
+  * vertex's triplets; for undirected algorithms, symmetrizing edges and
+  * reading src-state only (the q_graph_cc pattern) halves the exposure,
+  * and GraphX-style 2D edge partitioning (state replicated √P ways) is
+  * the known trade if a single out-hub ever dominates — deliberately not
+  * paid by default because it re-ships state every round for every graph.
   *
   * @param vertices  one row per vertex; must carry `id` (any equatable
   *                  type); all columns are visible to message expressions

@@ -32,8 +32,7 @@ object ScaleUp {
     // SF), so this is a separate, clearly-labeled output; queries joining
     // the part DIMENSION are out of contract on a shifted fixture.
     val shiftParts = args.length > 3 && args(3) == "shiftParts"
-    val spark = graft.Engine.builder("graft-scaleup", "local[32]", 32).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Engine.session("graft-scaleup")
     try {
       Files.createDirectories(Paths.get(out))
       val maxKey = spark.read.parquet(s"$src/orders.parquet")

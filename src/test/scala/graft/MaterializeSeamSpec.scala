@@ -4,10 +4,14 @@ import java.io.File
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `InternalSnap` is the one place that materializes a frame: a direct
-  * `localCheckpoint(` or `.checkpoint(` anywhere else in the main sources
-  * would bypass its stats cap, its release path and the checkpoint-dir
-  * reliability rule. Comments are excluded; the scan needs no Spark.
+/** Source-level guards; comments are excluded and the scans need no Spark.
+  *   - `InternalSnap` is the one place that materializes a frame: a direct
+  *     `localCheckpoint(` or `.checkpoint(` anywhere else in the main
+  *     sources would bypass its stats cap, its release path and the
+  *     checkpoint-dir reliability rule.
+  *   - The only environment names the sources read are the five that
+  *     `Bench` reads; every other setting is a program argument or a
+  *     session conf.
   */
 class MaterializeSeamSpec extends AnyFunSuite {
 
@@ -34,5 +38,17 @@ class MaterializeSeamSpec extends AnyFunSuite {
       if call.findFirstIn(line).isDefined
     } yield s"${f.getPath}:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("materialize through InternalSnap instead:\n", "\n", ""))
+  }
+
+  test("the sources read only Bench's five environment names") {
+    val prefix = "SPARK" + "_GRAFT_" // split, so this file does not match itself
+    val name = (prefix + "[A-Z_]+").r
+    val found = (for {
+      root <- Seq("src/main/scala", "src/test/scala")
+      f <- scalaFiles(new File(root))
+      line <- code(java.nio.file.Files.readString(f.toPath))
+      n <- name.findAllIn(line)
+    } yield n).toSet
+    assert(found == Set("CPUS", "SF_DIR", "MASTER", "EXEC_MEM", "BENCH_OUT").map(prefix + _))
   }
 }

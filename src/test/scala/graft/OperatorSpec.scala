@@ -1320,10 +1320,4 @@ class OperatorSpec extends SparkSpecBase {
       assert(e2.getMessage.contains(name), e2.getMessage)
     }
   }
-
-  test("TimeSql conf parsing: key=value entries, a malformed entry named in the error") {
-    assert(tools.TimeSql.parseConf(" a.b = 1 ;c=x=y;;") == Seq("a.b" -> "1", "c" -> "x=y"))
-    val e = intercept[IllegalArgumentException](tools.TimeSql.parseConf("a=1;oops"))
-    assert(e.getMessage.contains("'oops'"), e.getMessage)
-  }
 }
