@@ -37,8 +37,8 @@ object SessionCache {
     entry(spark).frames.computeIfAbsent(key, _ => build)
 
   /** Build-once per (session, key) CHILD SESSION — for work that must
-    * plan under a conf its caller's session does not carry (e.g. the
-    * BitmapDistinct gate, Pregel's AQE-off loop): actions re-plan frames
+    * plan under a conf its caller's session does not carry (e.g. a
+    * forced BitmapDistinct rule, Pregel's AQE-off loop): actions re-plan frames
     * under the conf current at action time, so the conf must live with
     * the frame's session. [[clear]] of the parent clears the child too.
     */

@@ -77,7 +77,6 @@ final class Pregel private (
     maxIterations: Int,
     requireConverged: Boolean,
     tag: Option[String],
-    tripletFields: Option[(Boolean, Boolean)],
     messageSalt: Int,
     hopBatch: Int,
     layerFuse: Int) {
@@ -90,12 +89,11 @@ final class Pregel private (
       maxIterations: Int = maxIterations,
       requireConverged: Boolean = requireConverged,
       tag: Option[String] = tag,
-      tripletFields: Option[(Boolean, Boolean)] = tripletFields,
       messageSalt: Int = messageSalt,
       hopBatch: Int = hopBatch,
       layerFuse: Int = layerFuse): Pregel =
     new Pregel(vertices, edges, stateCols, msgsToDst, msgsToSrc, aggExpr,
-      maxIterations, requireConverged, tag, tripletFields,
+      maxIterations, requireConverged, tag,
       messageSalt, hopBatch, layerFuse)
 
   /** Add a state column: `init` is evaluated once over the vertex row;
@@ -229,19 +227,6 @@ final class Pregel private (
     copy(layerFuse = f)
   }
 
-  /** Which endpoint STATES the message expressions read — the GraphX
-    * `TripletFields` optimization: a superstep only joins the state
-    * tables a message actually references, so a program whose sends read
-    * only the source state (frontier-gated SSSP/CC, PageRank) pays ONE
-    * state join per superstep instead of two. Auto-detected from the
-    * message expressions by default (`src.`/`dst.` references; a false
-    * positive merely keeps the join); set explicitly only if a message
-    * smuggles a reference past detection — a wrongly-skipped join fails
-    * LOUDLY at analysis (unresolved column), never silently.
-    */
-  def setTripletFields(useSrcState: Boolean, useDstState: Boolean): Pregel =
-    copy(tripletFields = Some((useSrcState, useDstState)))
-
   /** @return the vertex table with final state columns. */
   def run(): DataFrame = {
     require(stateCols.nonEmpty, "at least one withVertexColumn is required")
@@ -259,14 +244,16 @@ final class Pregel private (
     // keeps every round's joins exchange-free — see the dataflow note
     // below.
 
-    // TripletFields pruning: join only the endpoint states the messages
-    // read (regex with a word boundary; literals that merely CONTAIN
-    // "src."/"dst." keep the join — the safe direction).
-    val (needSrc, needDst) = tripletFields.getOrElse {
-      val texts = (msgsToDst ++ msgsToSrc).map(_.toString)
-      (texts.exists(_.matches("""(?s).*\bsrc\..*""")),
-        texts.exists(_.matches("""(?s).*\bdst\..*""")))
-    }
+    // TripletFields pruning (the GraphX optimization): a superstep joins
+    // only the endpoint states the messages read, so a program whose
+    // sends read only the source state (frontier-gated SSSP/CC, PageRank)
+    // pays ONE state join per superstep instead of two. Detected from the
+    // message expressions (regex with a word boundary; literals that
+    // merely CONTAIN "src."/"dst." keep the join — the safe direction; a
+    // wrongly-skipped join would fail LOUDLY at analysis, never silently).
+    val texts = (msgsToDst ++ msgsToSrc).map(_.toString)
+    val needSrc = texts.exists(_.matches("""(?s).*\bsrc\..*"""))
+    val needDst = texts.exists(_.matches("""(?s).*\bdst\..*"""))
 
     // STATE NEVER MOVES — the GraphX dataflow, relationally. Edges are
     // hash-partitioned ONCE on the frequently-joined endpoint; the state
@@ -523,8 +510,7 @@ object Pregel {
     graft.SessionCache.recorded(spark, PlansKind)
 
   def apply(vertices: DataFrame, edges: DataFrame): Pregel =
-    new Pregel(vertices, edges, Nil, Nil, Nil, None, 20, true, None,
-      None, 1, 1, 4)
+    new Pregel(vertices, edges, Nil, Nil, Nil, None, 20, true, None, 1, 1, 4)
 
   /** The sending edge's source-vertex column, inside message expressions. */
   def src(c: String): Column = col(s"src.$c")

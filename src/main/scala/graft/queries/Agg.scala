@@ -513,23 +513,24 @@ object Agg extends QModule {
     * naive text, so the hash gate proves the rewrite is invisible.
     *
     * The fixture is tiny, so this query stands in for the at-scale
-    * regime by dropping the size gate to 1 byte — in a CLONED session,
-    * because a caller's action (noop/parquet write) re-plans the frame
-    * under the conf current THEN: the clone keeps the gate open for the
-    * frame's whole life while the caller's session stays untouched
-    * (`BitmapDistinctSpec` pins the gate's default-off direction and the
-    * CBO-stats direction separately). l_orderkey is the
-    * closest-to-unique integral key lineitem has (~¼ of rows).
+    * regime by forcing the rule (`spark.graft.bitmapDistinct=force`;
+    * without CBO stats the at-scale 1 GiB size gate gives the same plan)
+    * — in a CLONED session, because a caller's action (noop/parquet
+    * write) re-plans the frame under the conf current THEN: the clone
+    * keeps the rule forced for the frame's whole life while the caller's
+    * session stays untouched (`BitmapDistinctSpec` pins the gate's
+    * thresholds and the CBO-stats direction separately). l_orderkey is
+    * the closest-to-unique integral key lineitem has (~¼ of rows).
     */
   val qAggDistinctAuto = QDef(
     "q_agg_distinct_auto",
     (s, d) => {
-      val gated = graft.SessionCache.memoSession(s, "bitmap-distinct-gated") {
+      val forced = graft.SessionCache.memoSession(s, "bitmap-distinct-gated") {
         val ns = s.newSession()
-        ns.conf.set(graft.optimizer.BitmapDistinct.MinBytesKey, "1")
+        ns.conf.set(graft.optimizer.BitmapDistinct.ModeKey, "force")
         ns
       }
-      val df = t(gated, d, "lineitem")
+      val df = t(forced, d, "lineitem")
         .groupBy("l_returnflag")
         .agg(
           countDistinct(col("l_orderkey")).as("ord_d"),

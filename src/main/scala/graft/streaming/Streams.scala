@@ -48,14 +48,6 @@ object Streams {
       .agg(count(lit(1)).as("cnt"), sum(col("value")).as("total"))
       .select(col("window.start").as("ws"), col("event_type"), col("cnt"), col("total"))
 
-  /** Sliding 1h/30m windowed counts. */
-  def slidingCounts(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(window(col("ts"), "1 hour", "30 minutes"))
-      .agg(count(lit(1)).as("cnt"))
-      .select(col("window.start").as("ws"), col("cnt"))
-
   /** Session windows (30-min gap) per user — state merges adjacent
     * sessions and closes on watermark advance.
     */

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** ANALYZE TABLE + cost-based optimization evidence (SURVEY §2.13 /
   * VERDICT r3 missing #3): table and column statistics land in the
   * catalog, feed the logical plan, and — with CBO + join reorder on —
@@ -10,16 +8,6 @@ import org.apache.spark.sql.functions._
   * the warehouse reference also works.
   */
 class AnalyzeCboSpec extends SparkSpecBase {
-
-  private def withConf(pairs: (String, String)*)(body: => Unit): Unit = {
-    val old = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
 
   test("ANALYZE TABLE computes row and column stats that reach the plan") {
     Tables.load(spark, sf, "customer").write.mode("overwrite").saveAsTable("cbo_customer")

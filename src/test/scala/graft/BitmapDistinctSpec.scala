@@ -22,19 +22,6 @@ class BitmapDistinctSpec extends SparkSpecBase {
         sum(col("l_linenumber")).as("sum_ln"))
   }
 
-  private def planOf(df: DataFrame): String =
-    df.queryExecution.executedPlan.toString
-
-  private def withConf[A](kvs: (String, String)*)(f: => A): A = {
-    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
   test("the switch, both ways: bitmap plan under the gate, stock plan outside it, same rows") {
     // default gate: 1 GiB size floor — the tiny fixture stays on the
     // stock two-phase distinct
@@ -42,24 +29,34 @@ class BitmapDistinctSpec extends SparkSpecBase {
     assert(!planOf(stock).contains("bitmap_construct_agg"),
       "default gate must keep the stock plan on a small input")
 
-    // gate open (size floor dropped): the SAME query plans through the
-    // bitmap rewrite — no Expand, no (group, key) two-phase distinct
+    // forced (what the size gate does at scale without stats; the gate's
+    // thresholds are pinned as pure functions below): the SAME query
+    // plans through the bitmap rewrite — no Expand, no (group, key)
+    // two-phase distinct
     val (bitmapPlan, bitmapRows, stockRows) =
-      withConf(BitmapDistinct.MinBytesKey -> "1") {
+      withConf(BitmapDistinct.ModeKey -> "force") {
         val b = distinctAgg()
         (planOf(b), b.collect().map(_.toSeq).toSet, stock.collect().map(_.toSeq).toSet)
       }
     assert(bitmapPlan.contains("bitmap_construct_agg"),
-      s"gated-open plan must be the bitmap form:\n$bitmapPlan")
+      s"forced plan must be the bitmap form:\n$bitmapPlan")
     assert(!bitmapPlan.contains("distinct"),
       "bitmap form must not retain a distinct aggregate")
     assert(bitmapRows == stockRows, "the rewrite changed results")
+    // mode=off against an open gate: see the CBO-stats test
+  }
 
-    // mode=off wins over any gate
-    withConf(BitmapDistinct.ModeKey -> "off",
-        BitmapDistinct.MinBytesKey -> "1") {
-      assert(!planOf(distinctAgg()).contains("bitmap_construct_agg"),
-        "off must disable the rule regardless of the gate")
+  test("the gate as a pure function: both sides of the ndv-ratio and size thresholds") {
+    import BitmapDistinct.{gate, MinBytes}
+    val (rows, none) = (Some(BigInt(1000)), Option.empty[BigInt])
+    // with stats the ndv ratio (0.5) decides, whatever the size
+    assert(gate(0, rows, Some(500)))
+    assert(!gate(MinBytes, rows, Some(499)))
+    // without usable stats the 1 GiB size floor decides
+    for ((r, d) <- Seq((none, none), (rows, none), (none, Some(BigInt(999))),
+        (Some(BigInt(0)), Some(BigInt(0))))) {
+      assert(gate(MinBytes, r, d), s"size floor must fire at 1 GiB ($r, $d)")
+      assert(!gate(MinBytes - 1, r, d), s"size floor must decline below 1 GiB ($r, $d)")
     }
   }
 
@@ -112,6 +109,12 @@ class BitmapDistinctSpec extends SparkSpecBase {
           s"ndv≈rows must open the gate:\n$nearUnique")
         assert(!lowNdv.contains("bitmap_construct_agg"),
           s"ndv≪rows must keep the stock plan:\n$lowNdv")
+        // mode=off wins over an open gate
+        withConf(BitmapDistinct.ModeKey -> "off") {
+          assert(!planOf(spark.table("bmd_stats").groupBy("g")
+            .agg(countDistinct(col("uniq")).as("d"))).contains("bitmap_construct_agg"),
+            "off must disable the rule regardless of the gate")
+        }
       } finally spark.sql("DROP TABLE IF EXISTS bmd_stats")
     }
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.Row
-
 /** Constructed-input proofs for the exact-substring dedup family and the
   * tf-idf term ranking — the fixture corpus exercises them at scale, but
   * only a hand-built corpus pins the SEMANTICS (which positions flag,

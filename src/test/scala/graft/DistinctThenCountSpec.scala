@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.optimizer.DistinctThenCount
@@ -12,24 +11,6 @@ import graft.optimizer.DistinctThenCount
   * and fences on companions / multiple aggregates.
   */
 class DistinctThenCountSpec extends SparkSpecBase {
-
-  private def withConf[A](kvs: (String, String)*)(f: => A): A = {
-    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
-  private def planOf(df: DataFrame): String = {
-    df.collect()
-    df.queryExecution.executedPlan.toString
-  }
-
-  private def rows(df: DataFrame): Set[String] =
-    df.collect().map(_.toString).toSet
 
   test("lone COUNT(DISTINCT k) rewrites to distinct-then-count, same rows") {
     Tables.register(spark, sf)
@@ -66,6 +47,12 @@ class DistinctThenCountSpec extends SparkSpecBase {
       val off = withConf(DistinctThenCount.ModeKey -> "off")(rows(spark.sql(sql)))
       assert(on == off, s"rows diverged for: $sql")
     }
+  }
+
+  test("the gate as a pure function: open at any input size") {
+    // no threshold: the rewrite is at-worst-equal by plan shape
+    assert(DistinctThenCount.gate(0, Some(0), Some(0)))
+    assert(DistinctThenCount.gate(BigInt(Long.MaxValue), None, None))
   }
 
   test("fences: companions and multiple distincts keep the stock plan") {

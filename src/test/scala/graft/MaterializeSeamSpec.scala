@@ -12,6 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - The only environment names the sources read are the five that
   *     `Bench` reads; every other setting is a program argument or a
   *     session conf.
+  *   - The only engine session confs are the three COUNT(DISTINCT) rule
+  *     modes; their thresholds are constants.
   */
 class MaterializeSeamSpec extends AnyFunSuite {
 
@@ -50,5 +52,17 @@ class MaterializeSeamSpec extends AnyFunSuite {
       n <- name.findAllIn(line)
     } yield n).toSet
     assert(found == Set("CPUS", "SF_DIR", "MASTER", "EXEC_MEM", "BENCH_OUT").map(prefix + _))
+  }
+
+  test("the sources name only the three spark.graft rule-mode keys") {
+    val prefix = "spark" + ".graft." // split, so this file does not match itself
+    val key = (java.util.regex.Pattern.quote(prefix) + "[A-Za-z][A-Za-z0-9.]*").r
+    val found = (for {
+      root <- Seq("src/main/scala", "src/test/scala")
+      f <- scalaFiles(new File(root))
+      line <- code(java.nio.file.Files.readString(f.toPath))
+      k <- key.findAllIn(line)
+    } yield k).toSet
+    assert(found == Set("bitmapDistinct", "distinctThenCount", "multiDistinctSplit").map(prefix + _))
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.optimizer.MultiDistinctSplit
@@ -16,24 +15,6 @@ import graft.optimizer.MultiDistinctSplit
   * posture).
   */
 class MultiDistinctSplitSpec extends SparkSpecBase {
-
-  private def withConf[A](kvs: (String, String)*)(f: => A): A = {
-    val olds = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally olds.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
-  private def planOf(df: DataFrame): String = {
-    df.collect()
-    df.queryExecution.executedPlan.toString
-  }
-
-  private def rows(df: DataFrame): Set[String] =
-    df.collect().map(_.toString).toSet
 
   // the q_agg_distinct shape: two single keys, one composite, a count
   private def aggDistinct = {
@@ -103,6 +84,15 @@ class MultiDistinctSplitSpec extends SparkSpecBase {
     val p2 = planOf(aggDistinct)
     assert(p2.contains("Expand") && !p2.contains("Union"),
       s"auto mode fired below the size gate:\n$p2")
+  }
+
+  test("the gate as a pure function: both sides of the 256 MiB size threshold") {
+    import MultiDistinctSplit.{gate, MinBytes}
+    // stats never open it: only the size estimate counts
+    for ((r, d) <- Seq((None, None), (Some(BigInt(10)), Some(BigInt(10))))) {
+      assert(gate(MinBytes, r, d))
+      assert(!gate(MinBytes - 1, r, d))
+    }
   }
 
   test("fences: a rand() child keeps the stock plan under force, rule-off rows") {

@@ -11,7 +11,6 @@ import org.apache.spark.sql.functions._
   * fixtures (reference-style, SURVEY.md §5 SQLTestData pattern).
   */
 class OperatorSpec extends SparkSpecBase {
-  import org.apache.spark.sql.Row
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
