@@ -19,12 +19,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         builder))
     }
     ext.injectOptimizerRule(_ => graft.optimizer.FoldDotProduct)
-    // The three COUNT(DISTINCT) rewrites (optimizer/DistinctAggs.scala)
-    // run as three passes of the same operator-optimization fixed point,
-    // so the single-distinct legs MultiDistinctSplit produces immediately
-    // re-qualify for the two rules before it.
+    // The two COUNT(DISTINCT) rewrites (optimizer/DistinctAggs.scala) run
+    // as two passes of the same operator-optimization fixed point, so the
+    // single-distinct legs MultiDistinctSplit produces immediately
+    // re-qualify for BitmapDistinct before it.
     ext.injectOptimizerRule(_ => graft.optimizer.BitmapDistinct)
-    ext.injectOptimizerRule(_ => graft.optimizer.DistinctThenCount)
     ext.injectOptimizerRule(_ => graft.optimizer.MultiDistinctSplit)
     // Canonicalization-safe scans for graft-snapped checkpoints: restores
     // ReuseExchange over snap-rooted subtrees (fused Pregel supersteps) —

@@ -10,6 +10,8 @@ import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsCon
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 
+import scala.annotation.unused
+
 /** Hadoop's `RawLocalFileSystem` without the per-file shell-outs.
   *
   * With no Hadoop native library on the host, the stock class forks
@@ -51,7 +53,7 @@ class ForkFreeLocalFileSystem extends LocalFileSystem(new ForkFreeRawLocalFileSy
   * `LocalFs` it ignores `uri`: `(URI, Configuration)` is the constructor
   * `AbstractFileSystem.get` calls.
   */
-class ForkFreeLocalFs(uri: URI, conf: Configuration) extends ChecksumFs(
+class ForkFreeLocalFs(@unused uri: URI, conf: Configuration) extends ChecksumFs(
     new DelegateToFileSystem(FsConstants.LOCAL_FS_URI, new ForkFreeRawLocalFileSystem, conf,
         FsConstants.LOCAL_FS_URI.getScheme, false) {
       override def getUriDefaultPort: Int = -1

@@ -6,13 +6,13 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LeafNode,
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types._
 
-/** The three COUNT(DISTINCT) rewrites ([[BitmapDistinct]],
-  * [[DistinctThenCount]], [[MultiDistinctSplit]]) over one shared
-  * classification of the aggregate list.
+/** The two COUNT(DISTINCT) rewrites ([[BitmapDistinct]],
+  * [[MultiDistinctSplit]]) over one shared classification of the
+  * aggregate list.
   *
   * Every rule keeps the same output contract: output attributes keep
   * their exprIds, names, types and nullability, so parent plans never
-  * notice the switch. They run as three passes in the
+  * notice the switch. They run as two passes in the
   * operator-optimization fixed point, in that order.
   *
   * @param group      the grouping attributes (all grouping expressions
@@ -184,70 +184,6 @@ object BitmapDistinct extends DistinctAggRule("spark.graft.bitmapDistinct", "aut
   }
 }
 
-/** Rewrites a LONE `COUNT(DISTINCT k…)` aggregate into distinct-then-count
-  * (the generalization of the kcore edge-build fix):
-  *
-  * {{{
-  *   Aggregate(g, count(distinct k1..kn), child)
-  *     ==>
-  *   Aggregate(g, count(k1..kn),
-  *     Aggregate(g ++ (k1..kn), g ++ (k1..kn), child))
-  * }}}
-  *
-  * Why: the two plans have the SAME shuffle structure, but Spark's
-  * dedicated single-distinct machinery measured pathologically slow
-  * under AQE (38.9 s vs 3.9 s on q_graph_kcore's 1.2 M-row edge build,
-  * r11). The explicit form keeps both aggregates on the ordinary
-  * map-side-combinable HashAggregate path.
-  *
-  * Exactness: the inner Aggregate dedups tuples (null tuples collapse to
-  * one row each); the outer non-distinct `count(k1..kn)` skips rows where
-  * any argument is null, the `COUNT(DISTINCT …)` semantics for any data
-  * type. So there is no stats gate: the rewrite is at-worst-equal by plan
-  * shape.
-  *
-  * Fences: EXACTLY ONE aggregate, a distinct COUNT with deterministic
-  * arguments; no non-distinct companions (they would aggregate over
-  * deduplicated rows). Aggregates [[BitmapDistinct]] already rewrote no
-  * longer contain a distinct count, so the two compose without overlap.
-  *
-  * `spark.graft.distinctThenCount` = on|off (default on).
-  */
-object DistinctThenCount extends DistinctAggRule("spark.graft.distinctThenCount", "on") {
-  def gate(sizeInBytes: BigInt, rowCount: Option[BigInt], ndv: Option[BigInt]): Boolean = true
-
-  protected def rewrite(agg: Aggregate, s: DistinctShape, mode: String): Option[LogicalPlan] = {
-    val keys = s.slots match {
-      case Seq((_, AggregateExpression(Count(ks), _, true, _, _)))
-          if ks.nonEmpty && ks.forall(_.deterministic) => ks
-      case _ => return None
-    }
-    // One inner column per DISTINCT key expression; keys that are already
-    // grouping attributes (or repeats) reuse the existing column so the
-    // inner Aggregate never carries duplicate exprIds.
-    val extras = scala.collection.mutable.ArrayBuffer.empty[NamedExpression]
-    val keyAttrs: Seq[Attribute] = keys.map {
-      case a: Attribute if s.group.exists(_.semanticEquals(a)) => a
-      case a: Attribute =>
-        if (!extras.exists(_.toAttribute.semanticEquals(a))) extras += a
-        a
-      case e =>
-        extras.collectFirst { case x: Alias if x.child.semanticEquals(e) => x.toAttribute }
-          .getOrElse {
-            val al = Alias(e, s"_dtc_k${extras.size}")()
-            extras += al
-            al.toAttribute
-          }
-    }
-    val innerGroup = s.group ++ extras.map {
-      case al: Alias => al.child
-      case a => a
-    }
-    val inner = Aggregate(innerGroup, s.group ++ extras, agg.child)
-    Some(Aggregate(s.group, rebuild(agg)((_, _) => aggExpr(Count(keyAttrs))), inner))
-  }
-}
-
 /** Stats-gated decomposition of a MULTI-distinct aggregate into a union
   * of single-distinct legs (the rule form of the hand-written
   * `q_agg_distinct_bitmap` twin):
@@ -268,8 +204,7 @@ object DistinctThenCount extends DistinctAggRule("spark.graft.distinctThenCount"
   * distinct machinery runs over the widened null-padded stream. The
   * union form scans the child once per leg, but each leg is a plain
   * single-distinct aggregate whose scan prunes to `g ++ ki`, and which
-  * re-qualifies in the same fixed point for [[BitmapDistinct]] or
-  * [[DistinctThenCount]].
+  * re-qualifies in the same fixed point for [[BitmapDistinct]].
   *
   * Merge correctness: every leg aggregates the SAME child, so each group
   * key appears exactly once per leg; per output slot exactly one leg
@@ -290,7 +225,8 @@ object DistinctThenCount extends DistinctAggRule("spark.graft.distinctThenCount"
   * join or aggregate per leg could dwarf the Expand saving); and (auto
   * mode) the child's estimated size must reach [[MinBytes]], 256 MiB,
   * the measured crossover (×10 fixture, pruned estimate ~25-50 MB: the
-  * split LOSES ~40% to the extra scans; ×100, 256-512 MB: it WINS ~10%).
+  * split LOSES ~40% to the extra scans; ×100, 256-512 MB: it wins
+  * 26-37% against `off` in three same-window pairs, BASELINE.md).
   *
   * `spark.graft.multiDistinctSplit` = off|auto|force (default auto).
   */
@@ -319,8 +255,8 @@ object MultiDistinctSplit extends DistinctAggRule("spark.graft.multiDistinctSpli
 
     // Each leg is a PROJECT of typed-null padding over a pure aggregate:
     // each distinct leg is group passthroughs + ONE lone distinct count,
-    // which the other two rules take up in the same fixed point (and
-    // still do once CollapseProject folds the padding into the Aggregate).
+    // which BitmapDistinct takes up in the same fixed point (and still
+    // does once CollapseProject folds the padding into the Aggregate).
     val g = s.group
     def leg(owns: Int => Boolean): LogicalPlan = {
       val owned = s.slots.indices.filter(owns).map { i =>

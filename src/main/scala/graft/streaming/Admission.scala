@@ -77,7 +77,7 @@ class Admission(spark: SparkSession,
     Option(store).getOrElse(new Admission.BlockStore(spark, compactEvery))
 
   /** Process one micro-batch of (doc_id, text). Call from foreachBatch. */
-  def step(batch: DataFrame, batchId: Long): Unit = this.synchronized {
+  def step(batch: DataFrame): Unit = this.synchronized {
     val docs = batch.select("doc_id", "text").persist()
     // One array-row per doc: the distinct shingle set + its size — the
     // store shape that lets the verify probe by doc instead of exploding

@@ -57,7 +57,7 @@ class MatView(spark: SparkSession, table: String) {
   }
 
   /** Apply one micro-batch of change records `(op 'u'|'d', k, g, v)`. */
-  def step(batch: DataFrame, batchId: Long): Unit = this.synchronized {
+  def step(batch: DataFrame): Unit = this.synchronized {
     // One effective op per key: delete dominates, else MAX-(v, g) upsert.
     val eff = batch
       .groupBy("k")

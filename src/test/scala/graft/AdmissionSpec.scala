@@ -76,7 +76,7 @@ class AdmissionSpec extends SparkSpecBase {
     val input = MemoryStream[(Long, String)]
     val q = input.toDF().toDF("doc_id", "text")
       .writeStream.outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => adm.step(b, id))
+      .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) => adm.step(b))
       .start()
     try {
       val cuts = Seq(docs.length / 7, docs.length / 3, docs.length * 2 / 3, docs.length)
@@ -102,7 +102,7 @@ class AdmissionSpec extends SparkSpecBase {
     val input2 = MemoryStream[(Long, String)]
     val q2 = input2.toDF().toDF("doc_id", "text")
       .writeStream.outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => adm2.step(b, id))
+      .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) => adm2.step(b))
       .start()
     try {
       for (i <- 0 until math.min(3, docs.length)) {
@@ -125,7 +125,7 @@ class AdmissionSpec extends SparkSpecBase {
     val input3 = MemoryStream[(Long, String)]
     val q3 = input3.toDF().toDF("doc_id", "text")
       .writeStream.outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => adm3.step(b, id))
+      .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) => adm3.step(b))
       .start()
     try {
       val step = math.max(1, docs.length / 6)
@@ -172,7 +172,7 @@ class AdmissionSpec extends SparkSpecBase {
     val in1 = MemoryStream[(Long, String)]
     val q1 = in1.toDF().toDF("doc_id", "text")
       .writeStream.outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => adm1.step(b, id))
+      .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) => adm1.step(b))
       .start()
     val cut = docs.length / 2
     try {
@@ -188,7 +188,7 @@ class AdmissionSpec extends SparkSpecBase {
     val in2 = MemoryStream[(Long, String)]
     val q2 = in2.toDF().toDF("doc_id", "text")
       .writeStream.outputMode("append")
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => adm2.step(b, id))
+      .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) => adm2.step(b))
       .start()
     try {
       in2.addData(docs.slice(cut, cut + cut / 2)); q2.processAllAvailable()

@@ -147,7 +147,7 @@ class ApssSpec extends SparkSpecBase {
   test("q_sim_apss equals the brute force on a randomized near-dup corpus") {
     val dir = "synth://apss-rand"
     val rnd = new scala.util.Random(42)
-    val base = (1 to 30).map(i => s"t${rnd.nextInt(12)}")
+    val base = (1 to 30).map(_ => s"t${rnd.nextInt(12)}")
     // 40 docs: random mutations of a shared template at varying edit rates,
     // so similarities spread across the threshold.
     val docs = (1L to 40L).map { id =>

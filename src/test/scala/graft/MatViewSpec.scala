@@ -55,7 +55,7 @@ class MatViewSpec extends SparkSpecBase {
     mv.init()
     val input = MemoryStream[Op]
     val q = input.toDF().toDF("op", "k", "g", "v").writeStream
-      .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) => mv.step(b, id))
+      .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) => mv.step(b))
       .start()
     try {
       batches.foreach { b => input.addData(b); q.processAllAvailable() }

@@ -54,7 +54,7 @@ class MaterializeSeamSpec extends AnyFunSuite {
     assert(found == Set("CPUS", "SF_DIR", "MASTER", "EXEC_MEM", "BENCH_OUT").map(prefix + _))
   }
 
-  test("the sources name only the three spark.graft rule-mode keys") {
+  test("the sources name only the two spark.graft rule-mode keys") {
     val prefix = "spark" + ".graft." // split, so this file does not match itself
     val key = (java.util.regex.Pattern.quote(prefix) + "[A-Za-z][A-Za-z0-9.]*").r
     val found = (for {
@@ -63,6 +63,6 @@ class MaterializeSeamSpec extends AnyFunSuite {
       line <- code(java.nio.file.Files.readString(f.toPath))
       k <- key.findAllIn(line)
     } yield k).toSet
-    assert(found == Set("bitmapDistinct", "distinctThenCount", "multiDistinctSplit").map(prefix + _))
+    assert(found == Set("bitmapDistinct", "multiDistinctSplit").map(prefix + _))
   }
 }

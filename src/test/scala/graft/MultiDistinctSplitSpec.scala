@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Union}
 import org.apache.spark.sql.functions._
 
 import graft.optimizer.MultiDistinctSplit
@@ -7,8 +9,8 @@ import graft.optimizer.MultiDistinctSplit
 /** The multi-distinct decomposition rule
   * ([[graft.optimizer.MultiDistinctSplit]]): under force it replaces the
   * Expand-based multi-distinct plan with a union of single-distinct legs
-  * (which the fixed point further rewrites via DistinctThenCount /
-  * BitmapDistinct), bit-exact against the stock plan including null
+  * (which BitmapDistinct may take up in the same fixed point), bit-exact
+  * against the stock plan including null
   * keys, null group keys, composite keys, and companions; it fences on
   * non-scan and non-deterministic children; and in auto mode the fixture
   * stays on the stock plan (the size gate, the q_agg_distinct_auto
@@ -36,9 +38,14 @@ class MultiDistinctSplitSpec extends SparkSpecBase {
       val p = planOf(df)
       assert(!p.contains("Expand"), s"split did not fire:\n$p")
       assert(p.contains("Union"), s"split lost the union of legs:\n$p")
-      // each leg re-qualified for DistinctThenCount in the same fixed
-      // point: no distinct-aggregate machinery survives anywhere
-      assert(!p.contains("distinct"), s"a leg kept the distinct machinery:\n$p")
+      // one aggregate per leg: a lone distinct for each of the three
+      // distinct slots, and the companion leg's plain count
+      val legs = df.queryExecution.optimizedPlan.collectFirst { case u: Union => u.children }.get
+      val perLeg = legs.map(_.collect { case a: Aggregate =>
+        a.aggregateExpressions.flatMap(_.collect { case ae: AggregateExpression if ae.isDistinct => ae }).size
+      })
+      assert(perLeg.sortBy(_.head) == Seq(Seq(0), Seq(1), Seq(1), Seq(1)),
+        s"legs are not single-distinct aggregates: $perLeg\n$p")
       assert(rows(df) == stockRows)
     }
   }
