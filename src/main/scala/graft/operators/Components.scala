@@ -4,26 +4,19 @@ import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.InternalSnap
 
-/** Connected components over an undirected edge list by iterative
-  * min-label propagation — the duplicate-CLUSTERING step that turns
-  * near-dup PAIRS (LSH/jaccard output) into groups with one canonical
-  * representative each (keep min doc_id, drop the rest).
+/** Connected components over an undirected edge list — the duplicate-
+  * CLUSTERING step that turns near-dup PAIRS (LSH/jaccard output) into
+  * groups with one canonical representative each (keep min doc_id, drop
+  * the rest).
   *
-  * Spark-first design (SURVEY §4.3a — compose, don't hand-schedule): the
-  * driver loop runs over ITERATIONS (bounded by the cluster diameter,
-  * like the Lloyd loop in q_sim_kmeans), never over rows; each iteration
-  * is ONE distributed join + min-aggregate whose materializing action
-  * doubles as the convergence probe — the count of changed labels rides
-  * out as an observed metric (`Dataset.observe` / CollectMetrics), so no
-  * separate comparison job runs per round. Checkpointing truncates the
-  * growing lineage each round through `InternalSnap`: executor-local
-  * blocks (fine single-JVM), or, once `sparkContext.setCheckpointDir` is
-  * set, the reliable checkpoint a 1000-executor cluster needs to survive
-  * executor loss. Each round frees the generation it replaces.
-  * Dup clusters are shallow in practice (near-clique neighborhoods), so
-  * propagation converges in a handful of rounds; a component whose
-  * diameter exceeds `maxIter` fails LOUDLY (require) instead of
-  * returning silently wrong labels.
+  * Min-label propagation is a program on the one [[Pregel]] loop, as
+  * connected components is in GraphX (`graphx/.../lib/
+  * ConnectedComponents.scala`): the loop owns the state layout,
+  * checkpointing, observed convergence, generation release and the loud
+  * non-convergence failure. Dup clusters are shallow in practice
+  * (near-clique neighborhoods), so it converges in a handful of
+  * supersteps; [[starContract]] is the O(log n)-round alternative for
+  * long chains.
   */
 object Components {
 
@@ -41,57 +34,30 @@ object Components {
     */
   def labelPropagate(
       edges: DataFrame, a: String, b: String, maxIter: Int = 20,
-      star: Boolean = false): DataFrame = {
-    if (star) return starContract(edges, a, b, maxIter)
-    // State-stationary placement (the r9 Pregel dataflow): the
-    // symmetrized edges live hash-partitioned on the PROBE endpoint
-    // (`dst`), labels on `id`, both layouts DECLARED through the
-    // checkpoint (InternalSnap.snapKeyed) so every round's neighbor join is an
-    // exchange-free co-partitioned shuffle-hash join and the fold join
-    // leaves the label table in place — the only per-round movement is
-    // the min-label message aggregation.
-    val P = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    def snapped(df: DataFrame, keys: Seq[String]): DataFrame =
-      InternalSnap.snapKeyed(df, keys, P)
-    val sym = snapped(
-      edges.select(col(a).as("src"), col(b).as("dst"))
-        .union(edges.select(col(b).as("src"), col(a).as("dst")))
-        .distinct(),
-      Seq("dst"))
-    var labels = snapped(
-      sym.select(col("src").as("id")).distinct()
-        .withColumn("label", col("id")),
-      Seq("id"))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      // min label reachable over one hop; the changed-count is observed
-      // on the fold join's materializing action — no separate probe job.
-      val delivered = sym
-        .join(labels.hint("shuffle_hash"), sym("dst") === labels("id"))
-        .select(sym("src").as("id"), col("label").as("msg"))
-        .groupBy("id").agg(min("msg").as("msg"))
-        .hint("shuffle_hash")
-      val obs = Observation()
-      val next = snapped(
-        labels.join(delivered, Seq("id"), "left")
-          .observe(obs, sum(when(col("msg") < col("label"), 1L)
-            .otherwise(0L)).as("changed"))
-          .select(col("id"), least(col("label"), col("msg")).as("label")),
-        Seq("id"))
-      // eager checkpoint above already ran the plan; get() returns the
-      // recorded metric without another action (null sum = empty input)
-      converged = Option(obs.get("changed")).forall(_ == 0L)
-      InternalSnap.free(labels)
-      labels = next
-      i += 1
+      star: Boolean = false): DataFrame =
+    if (star) starContract(edges, a, b, maxIter)
+    else {
+      // snapped: the four references below (vertices union ×2, edges
+      // union ×2) would otherwise each replay the input's lineage
+      val pairs = InternalSnap.snap(edges.select(col(a), col(b)))
+      val vertices = pairs.select(col(a).as("id")).union(pairs.select(col(b))).distinct()
+      val sym = pairs.select(col(a).as("src"), col(b).as("dst"))
+        .union(pairs.select(col(b).as("src"), col(a).as("dst")))
+      // sends gate on `src.improved` ("my label dropped last round";
+      // everyone announces in round 1): the program reads source state
+      // only, so each superstep joins one state table
+      try Pregel(vertices, sym)
+        .withVertexColumn("improved", lit(true),
+          Pregel.msg.isNotNull && Pregel.msg < col("cc"))
+        .withVertexColumn("cc", col("id"), least(col("cc"), Pregel.msg))
+        .sendMsgToDst(when(Pregel.src("improved"), Pregel.src("cc")))
+        .aggMsgs(min(Pregel.msg))
+        .setMaxIter(maxIter)
+        .setTag("cc")
+        .run()
+        .select(col("id"), col("cc").as("label"))
+      finally InternalSnap.free(pairs)
     }
-    require(converged,
-      s"labelPropagate did not converge in $maxIter rounds — a component's " +
-        "diameter exceeds maxIter; raise maxIter instead of consuming " +
-        "partial labels")
-    labels
-  }
 
   /** Alternating star contraction (the public large-star/small-star
     * algorithm family — Kiveris et al., "Connected Components in

@@ -20,7 +20,7 @@ import org.apache.spark.sql.graft.InternalSnap
   * COUNT per round to detect the fixpoint, the same convergence probe
   * as [[Pregel]]'s observed message count). Live sets snap through
   * `InternalSnap.snap` so lineage and stats stay flat across rounds, and
-  * every snap but the returned one is freed on exit.
+  * each generation is freed once the next has materialized.
   *
   * Scale (100 TB): work per round tracks the LIVE edge count, which is
   * monotone non-increasing; peel depth is a graph property (not a data
@@ -42,10 +42,10 @@ object KCore {
     val e = InternalSnap.snap(edges.select(col("u"), col("v")))
     var alive = InternalSnap.snap(e.select(col("u").as("id")).distinct())
     var n = alive.count()
-    val trail = scala.collection.mutable.ArrayBuffer[DataFrame](alive)
     var rounds = 0
+    var converged = false
     try {
-      while (true) {
+      while (!converged) {
         rounds += 1
         require(rounds <= maxIter,
           s"k-core peel did not converge in $maxIter rounds — raise maxIter " +
@@ -55,15 +55,15 @@ object KCore {
           .join(alive.select(col("id").as("av")), col("v") === col("av"), "left_semi")
         val deg = live.groupBy(col("u").as("id")).agg(count(lit(1)).as("core_deg"))
         val next = InternalSnap.snap(deg.filter(col("core_deg") >= k))
-        trail += next
+        InternalSnap.free(alive) // `next` is materialized: eager snap
+        alive = next
         val n2 = next.count()
-        if (n2 == n) return (next, rounds)
+        converged = n2 == n
         n = n2
-        alive = next.select("id")
       }
-      sys.error("unreachable")
+      (alive, rounds)
     } finally {
-      trail.dropRight(1).foreach(InternalSnap.free)
+      if (!converged) InternalSnap.free(alive)
       InternalSnap.free(e)
     }
   }

@@ -20,11 +20,13 @@ import org.apache.spark.sql.graft.InternalSnap
   * min/sum aggregate → left join back), fully codegen'd, so Catalyst
   * owns join strategy and AQE owns skew. Convergence is observed, not
   * polled: the count of vertices that received a message rides out of
-  * the materializing checkpoint action as a `Dataset.observe` metric
-  * (the [[Components]] pattern), so no extra job runs per round. Halting
-  * matches GraphX: a superstep that delivers ZERO messages ends the run;
-  * a vertex with no incoming message keeps its state (update expressions
-  * see `Pregel.msg` as null — `least`/`when` fold it away).
+  * the materializing checkpoint action as a `Dataset.observe` metric,
+  * so no extra job runs per round. Halting matches GraphX: a superstep
+  * that delivers ZERO messages ends the run; a vertex with no incoming
+  * message keeps its state (update expressions see `Pregel.msg` as null
+  * — `least`/`when` fold it away). Every snap but the returned state —
+  * state generations, layer snaps, the edge snap — is freed as soon as
+  * nothing reads it.
   *
   * Scale (100 TB): per superstep the edge table shuffles twice (hash on
   * src, then dst) and messages once (hash on target id) — all three are
@@ -49,13 +51,12 @@ import org.apache.spark.sql.graft.InternalSnap
   * Hot-vertex skew (power-law graphs): a vertex with huge IN-degree is
   * absorbed by the message fold — Spark's partial aggregation bounds its
   * per-reducer fan-in at the map-task count for the constant-state
-  * aggregates the model uses, and [[setMessageSalt]] adds a two-level
-  * (id, salt) pre-fold for the regimes where that bound is weak (both
-  * measured on a star graph — PregelSpec; BASELINE.md r10 star-graph
-  * numbers). A vertex with huge OUT-degree concentrates its edge rows in
-  * one partition of the src-keyed layout, so one task computes that
-  * vertex's triplets; for undirected algorithms, symmetrizing edges and
-  * reading src-state only (the q_graph_cc pattern) halves the exposure,
+  * aggregates the model uses (a 2 M-spoke star holds the hub to 0.7% of
+  * max task time — BASELINE.md r10). A vertex with huge OUT-degree
+  * concentrates its edge rows in one partition of the src-keyed layout,
+  * so one task computes that vertex's triplets; for undirected
+  * algorithms, symmetrizing edges and reading src-state only (the
+  * [[Components.labelPropagate]] program) halves the exposure,
   * and GraphX-style 2D edge partitioning (state replicated √P ways) is
   * the known trade if a single out-hub ever dominates — deliberately not
   * paid by default because it re-ships state every round for every graph.
@@ -77,7 +78,6 @@ final class Pregel private (
     maxIterations: Int,
     requireConverged: Boolean,
     tag: Option[String],
-    messageSalt: Int,
     hopBatch: Int,
     layerFuse: Int) {
 
@@ -89,12 +89,10 @@ final class Pregel private (
       maxIterations: Int = maxIterations,
       requireConverged: Boolean = requireConverged,
       tag: Option[String] = tag,
-      messageSalt: Int = messageSalt,
       hopBatch: Int = hopBatch,
       layerFuse: Int = layerFuse): Pregel =
     new Pregel(vertices, edges, stateCols, msgsToDst, msgsToSrc, aggExpr,
-      maxIterations, requireConverged, tag,
-      messageSalt, hopBatch, layerFuse)
+      maxIterations, requireConverged, tag, hopBatch, layerFuse)
 
   /** Add a state column: `init` is evaluated once over the vertex row;
     * `update` is evaluated each superstep over the vertex row (current
@@ -135,34 +133,6 @@ final class Pregel private (
     * per-round breakdown, not just the total.
     */
   def setTag(name: String): Pregel = copy(tag = Some(name))
-
-  /** Hot-vertex (power-law in-degree) message aggregation: with `n > 1`
-    * the per-round message fold runs TWO-LEVEL — messages pre-aggregate
-    * on `(id, salt)` (salt round-robins over `n` buckets), then the
-    * per-id partials fold to the final value — so no single reduce task
-    * ever merges more than `~fan-in/n + n` rows for one hot target.
-    *
-    * When it matters: Spark's partial (map-side) aggregation already
-    * bounds a hot vertex's final fan-in at the MAP task count for
-    * reductive aggregates (min/sum — each map task emits one partial per
-    * id), so at moderate parallelism the single-level plan does not
-    * serialize (the star-graph probe measures this). The salt is the
-    * guard for the regimes where that bound is weak: clusters whose map
-    * side is many thousands of tasks, aggregates whose partial state is
-    * NOT constant-size (so per-row merge cost at the final reducer is
-    * real), and forced-spill paths where one reducer's sort dominates.
-    *
-    * Legality: the salted plan applies `aggMsgs` twice (partials, then
-    * merge), so the aggregate must be its own merge — true for the
-    * associative-commutative, constant-state folds the Pregel model
-    * already requires (min/max/sum/bit ops), NOT for count/avg/collect
-    * shapes (count of partial counts double-counts). The spec pins
-    * salted ≡ unsalted results for the shipped algorithms.
-    */
-  def setMessageSalt(n: Int): Pregel = {
-    require(n >= 1, "message salt must be >= 1")
-    copy(messageSalt = n)
-  }
 
   /** Long-diameter relaxation: with `k > 1` each SUPERSTEP composes `k`
     * relaxation layers (triplet join → message fold → state update) into
@@ -271,7 +241,7 @@ final class Pregel private (
     // join still lets Catalyst choose its strategy — co-locating BOTH
     // endpoints needs a second edge copy, GraphX's routing-table trade,
     // which a caller can express by symmetrizing edges and reading src
-    // only — see q_graph_cc.)
+    // only — see Components.labelPropagate.)
     val sessionP =
       vertices.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     val partKey = if (needSrc || !needDst) "_esrc" else "_edst"
@@ -341,7 +311,7 @@ final class Pregel private (
     // One relaxation LAYER: triplet join → gated messages → frontier
     // fold → state update; returns the updated state WITH the message
     // column still attached (the caller observes or drops it).
-    def relaxWith(state: DataFrame, salt: Int): DataFrame = {
+    def relax(state: DataFrame): DataFrame = {
       val triSrc =
         if (!needSrc) e
         else e.join(
@@ -360,21 +330,10 @@ final class Pregel private (
       // (map-side combined). Its exchange lands at P partitions and the
       // fold stage also reads the state's checkpoint blocks, so AQE
       // cannot coalesce the read — the fold join is co-partitioned with
-      // the state AS PLANNED and the state side never moves. With
-      // messageSalt > 1 the fold is TWO-LEVEL (see setMessageSalt): a
-      // (id, salt) pre-aggregation bounds any one task's merge fan-in
-      // for a hot vertex, at the price of a second frontier exchange.
-      val inbound = outbound.reduce(_ unionByName _)
+      // the state AS PLANNED and the state side never moves.
+      val delivered = outbound.reduce(_ unionByName _)
         .where(col(Pregel.MsgCol).isNotNull)
-      val delivered = (if (salt <= 1) {
-        inbound.groupBy("id").agg(agg.as(Pregel.MsgCol))
-      } else {
-        inbound
-          .withColumn(Pregel.SaltCol,
-            pmod(monotonically_increasing_id(), lit(salt.toLong)))
-          .groupBy("id", Pregel.SaltCol).agg(agg.as(Pregel.MsgCol))
-          .groupBy("id").agg(agg.as(Pregel.MsgCol))
-      })
+        .groupBy("id").agg(agg.as(Pregel.MsgCol))
         .hint("shuffle_hash") // build the frontier, never the state
       stateCols.foldLeft(state.join(delivered, Seq("id"), "left")) {
         case (df, (n, _, update)) => df.withColumn(n, update)
@@ -395,12 +354,10 @@ final class Pregel private (
     // Fusion also requires deterministic state-update, message and
     // aggregate expressions (ADVICE r12 #1): a fused layer is evaluated
     // once for both of its consumers only through ReuseExchange, while a
-    // layer snap guarantees it. The check analyzes one unsalted layer (the
-    // salt's round-robin id is non-deterministic by design and harmless).
-    def relax(state: DataFrame): DataFrame = relaxWith(state, messageSalt)
+    // layer snap guarantees it. The check analyzes one layer.
     val fuseEff =
       if (hopBatch > 1 && Pregel.fusable(e, cur) &&
-        relaxWith(cur, 1).queryExecution.analyzed.deterministic) layerFuse
+        relax(cur).queryExecution.analyzed.deterministic) layerFuse
       else 1
     var i = 0
     var active = true
@@ -435,18 +392,19 @@ final class Pregel private (
           .as("delivered"))
         .drop(Pregel.MsgCol)
       val next = InternalSnap.snapKeyed(folded, Seq("id"), P, Some(ls))
+      // Round-2 plan, recorded per tag (`graft.Explain` prints it): the
+      // steady-state shape — exchange-free co-partitioned joins, one
+      // frontier shuffle, pruned endpoint states — either holds here or
+      // doesn't, and `PregelSpec` pins it structurally. Planned before
+      // the free below, which drops its inputs from the snap registry.
+      if (i == 1) tag.foreach(graft.SessionCache.record(vertices.sparkSession,
+        Pregel.PlansKind, _, folded.queryExecution.executedPlan.toString))
       // `next` is fully materialized — release the dead generations NOW
       // (layer snaps and the previous state): a long hop-batched run
       // otherwise accumulates every layer's blocks for its lifetime
       // (measured 30 GB of /tmp block files in one ×100 pass)
       layerSnaps.foreach(InternalSnap.free)
-      if (cur ne e) InternalSnap.free(cur)
-      // Round-2 plan, recorded per tag (`graft.Explain` prints it): the
-      // steady-state shape — exchange-free co-partitioned joins, one
-      // frontier shuffle, pruned endpoint states — either holds here or
-      // doesn't, and `PregelSpec` pins it structurally.
-      if (i == 1) tag.foreach(graft.SessionCache.record(vertices.sparkSession,
-        Pregel.PlansKind, _, folded.queryExecution.executedPlan.toString))
+      InternalSnap.free(cur)
       // the eager checkpoint above already ran the plan; get() returns
       // the recorded metric without another action (null sum = no rows)
       val nDelivered =
@@ -457,6 +415,8 @@ final class Pregel private (
       i += 1
     }
     tag.foreach(graft.SessionCache.record(vertices.sparkSession, Pregel.RunsKind, _, rounds.toSeq))
+    InternalSnap.free(e)
+    if (requireConverged && active) InternalSnap.free(cur) // refused: returns nothing
     require(!requireConverged || !active,
       s"Pregel did not converge in $maxIterations supersteps — messages " +
         "were still flowing; raise setMaxIter (rounds scale with graph " +
@@ -467,7 +427,6 @@ final class Pregel private (
 
 object Pregel {
   private[operators] val MsgCol = "_pregel_msg"
-  private[operators] val SaltCol = "_pregel_salt"
 
   /** The fuse gate's threshold on materialized bytes (measured, r12 —
     * see the fuse-gate note in [[Pregel.run]]).
@@ -510,7 +469,7 @@ object Pregel {
     graft.SessionCache.recorded(spark, PlansKind)
 
   def apply(vertices: DataFrame, edges: DataFrame): Pregel =
-    new Pregel(vertices, edges, Nil, Nil, Nil, None, 20, true, None, 1, 1, 4)
+    new Pregel(vertices, edges, Nil, Nil, Nil, None, 20, true, None, 1, 4)
 
   /** The sending edge's source-vertex column, inside message expressions. */
   def src(c: String): Column = col(s"src.$c")

@@ -311,15 +311,16 @@ object Dedup extends QModule {
   /** Duplicate CLUSTERING: the verified near-dup pairs (q_dedup_jaccard)
     * collapsed into connected components — each doc labeled with the min
     * doc_id of its cluster (the canonical keeper). Spark side is the
-    * iterative min-label propagation in [[graft.operators.Components]]
-    * (Spark 4's recursive CTE only supports UNION ALL, which cannot
-    * terminate on cyclic reachability); the oracle IS the recursive
+    * min-label propagation of [[graft.operators.Components]], the Pregel
+    * program q_graph_cc also runs (`graft.Explain` prints its `[pregel
+    * cc]` rounds); Spark 4's recursive CTE only supports UNION ALL, which
+    * cannot terminate on cyclic reachability. The oracle IS the recursive
     * transitive closure, which DuckDB's UNION-dedup recursion can run.
     */
   val qDedupCluster = QDef(
     "q_dedup_cluster",
     (s, d) => graft.operators.Components
-      .labelPropagate(qDedupJaccard.fn(s, d).select("a_id", "b_id"), "a_id", "b_id")
+      .labelPropagate(qDedupJaccard.fn(s, d), "a_id", "b_id")
       .select(col("id").as("doc_id"), col("label").as("rep")),
     Some(s"""
       WITH RECURSIVE $shinglesSqlDuck, $minhashSqlDuck, $bandsSqlDuck, $candSqlDuck,
@@ -353,7 +354,7 @@ object Dedup extends QModule {
   val qDedupClusterStar = QDef(
     "q_dedup_cluster_star",
     (s, d) => graft.operators.Components
-      .labelPropagate(qDedupJaccard.fn(s, d).select("a_id", "b_id"), "a_id", "b_id",
+      .labelPropagate(qDedupJaccard.fn(s, d), "a_id", "b_id",
         star = true)
       .select(col("id").as("doc_id"), col("label").as("rep")),
     qDedupCluster.oracle)
@@ -822,8 +823,7 @@ object Dedup extends QModule {
     "q_stat_leakage_split",
     (s, d) => {
       val rep = graft.operators.Components
-        .labelPropagate(qDedupJaccard.fn(s, d).select("a_id", "b_id"),
-          "a_id", "b_id", star = true)
+        .labelPropagate(qDedupJaccard.fn(s, d), "a_id", "b_id", star = true)
         .select(col("id").as("rid"), col("label").as("rep"))
       t(s, d, "documents").select("doc_id")
         .join(rep, col("doc_id") === col("rid"), "left")

@@ -6,20 +6,20 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.InternalSnap
 
 import graft.{QDef, QModule}
-import graft.operators.Pregel
+import graft.operators.{Components, Pregel}
 
 /** General message-passing graph computation, declared through the
   * [[graft.operators.Pregel]] surface — the engine-side expression of the
-  * reference's GraphX capability class (`graphx/.../Pregel.scala:92`),
-  * previously covered only by the connected-components special case
-  * ([[graft.operators.Components]]).
+  * reference's GraphX capability class (`graphx/.../Pregel.scala:92`).
   *
-  * Both queries run a REAL vertex program (superstep loop, message
-  * aggregation, observed convergence) against an oracle computed a
-  * completely different way — a window running-sum for SSSP, DuckDB's
-  * recursive transitive closure for components — so the Pregel machinery
-  * itself (triplet join orientation, message nulls, halting) is what the
-  * hash-compare proves.
+  * The SSSP, rank and components queries run a REAL vertex program
+  * (superstep loop, message aggregation, observed convergence) against
+  * an oracle computed a completely different way — a window running-sum
+  * for SSSP, a closed form for rank, DuckDB's recursive transitive
+  * closure for components ([[graft.operators.Components.labelPropagate]]
+  * is itself a Pregel program) — so the Pregel machinery itself (triplet
+  * join orientation, message nulls, halting) is what the hash-compare
+  * proves.
   */
 object Graph extends QModule {
 
@@ -133,42 +133,17 @@ object Graph extends QModule {
     bench = true)
 
   /** Connected components as a general vertex program: min-id flooding
-    * over the verified near-dup pairs (the same graph and the same
-    * recursive-closure oracle as q_dedup_cluster) — pinning the Pregel
-    * surface oracle-equal to the two special-cased algorithms in
-    * [[graft.operators.Components]] forever, not just property-equal on
-    * generated graphs.
-    *
-    * The undirected flood SYMMETRIZES the edge list once up front and
-    * gates sends on `src.improved` ("my label dropped last round";
-    * everyone announces in round 1) — like [[qGraphSssp]] this reads only
-    * source state, so triplet-field pruning drops the dst-state join the
-    * earlier two-directional (`sendMsgToSrc` + `src.cc < dst.cc`) form
-    * forced every superstep.
+    * ([[graft.operators.Components.labelPropagate]], a Pregel program)
+    * over the verified near-dup pairs — the same graph and the same
+    * recursive-closure oracle as q_dedup_cluster, at the budget of 30
+    * supersteps. Like [[qGraphSssp]] the program reads only source state,
+    * so its superstep plan is the pruned one-state-join shape.
     */
   val qGraphCc = QDef(
     "q_graph_cc",
-    (s, d) => {
-      // snapped: the verified-pairs frame is tiny (LSH-verified
-      // near-dup pairs) but its lineage is the whole minhash→band→verify
-      // pipeline, which the four references below (vertices union ×2,
-      // edges union ×2) would otherwise replay (r11).
-      val pairs = InternalSnap.snap(Dedup.qDedupJaccard.fn(s, d).select("a_id", "b_id"))
-      val vertices = pairs.select(col("a_id").as("id"))
-        .union(pairs.select(col("b_id"))).distinct()
-      val edges = pairs.select(col("a_id").as("src"), col("b_id").as("dst"))
-        .union(pairs.select(col("b_id").as("src"), col("a_id").as("dst")))
-      Pregel(vertices, edges)
-        .withVertexColumn("improved", lit(true),
-          Pregel.msg.isNotNull && Pregel.msg < col("cc"))
-        .withVertexColumn("cc", col("id"), least(col("cc"), Pregel.msg))
-        .sendMsgToDst(when(Pregel.src("improved"), Pregel.src("cc")))
-        .aggMsgs(min(Pregel.msg))
-        .setMaxIter(30)
-        .setTag("cc")
-        .run()
-        .select(col("id").as("doc_id"), col("cc").as("rep"))
-    },
+    (s, d) => Components
+      .labelPropagate(Dedup.qDedupJaccard.fn(s, d), "a_id", "b_id", maxIter = 30)
+      .select(col("id").as("doc_id"), col("label").as("rep")),
     Dedup.qDedupCluster.oracle,
     bench = true)
 
@@ -467,16 +442,15 @@ object Graph extends QModule {
         var cur = InternalSnap.snap(
           f0.select(col("v"), col("succ").as("p"),
             least(col("v"), col("succ")).as("mn")))
-        val trail = scala.collection.mutable.ArrayBuffer[DataFrame](cur)
         for (_ <- 1 to k.toInt) {
           val b = cur.select(col("v").as("v2"), col("p").as("p2"), col("mn").as("mn2"))
-          cur = InternalSnap.snap(
+          val next = InternalSnap.snap(
             cur.join(b, col("p") === col("v2"))
               .select(col("v"), col("p2").as("p"),
                 least(col("mn"), col("mn2")).as("mn")))
-          trail += cur
+          InternalSnap.free(cur) // `next` is materialized: eager snap
+          cur = next
         }
-        trail.dropRight(1).foreach(InternalSnap.free)
         cur
       }
       val core = ptr.select(col("v").as("v2"), col("mn").as("mn2"))

@@ -170,17 +170,11 @@ class DmlCatalog extends TableCatalog with SupportsNamespaces with ProcedureCata
     Array(Identifier.of(Array("system"), "optimize"),
       Identifier.of(Array("system"), "vacuum"))
 
-  override def loadProcedure(ident: Identifier): procedures.UnboundProcedure = {
-    if (!ident.namespace().sameElements(Array("system")))
-      throw new RuntimeException(
-        s"procedure ${key(ident)} not found (try system.vacuum / system.optimize)")
-    ident.name().toLowerCase match {
-      case "vacuum" => new VacuumProcedure(tables)
-      case "optimize" => new OptimizeProcedure(tables)
-      case _ => throw new RuntimeException(
-        s"procedure ${key(ident)} not found (try system.vacuum / system.optimize)")
-    }
-  }
+  override def loadProcedure(ident: Identifier): procedures.UnboundProcedure =
+    Some(ident).filter(_.namespace().sameElements(Array("system")))
+      .flatMap(i => TableProcedure.load(tables, i.name().toLowerCase))
+      .getOrElse(throw new RuntimeException(
+        s"procedure ${key(ident)} not found (try system.vacuum / system.optimize)"))
 
   // Minimal namespace surface: a single implicit default namespace, so
   // resolution (USE / qualified names) never trips on metadata lookups.
@@ -198,40 +192,38 @@ class DmlCatalog extends TableCatalog with SupportsNamespaces with ProcedureCata
   override def dropNamespace(namespace: Array[String], cascade: Boolean): Boolean = false
 }
 
-/** `system.vacuum(table, keep)` — the DSv2 stored-procedure form of
-  * snapshot retention ([[DmlTable.vacuum]]): invoked through Spark's
-  * `CALL` statement, bound by the analyzer (`BindProcedures` coerces and
-  * orders arguments, named or positional), and returning a one-row
-  * result scan (expired/retained counts) like any maintenance command.
+/** A DSv2 stored procedure `system.<name>(table, <param>)` over one
+  * [[DmlTable]]: invoked through Spark's `CALL` statement, bound by the
+  * analyzer (`BindProcedures` coerces and orders arguments, named or
+  * positional), and returning a one-row result scan like any maintenance
+  * command. The procedures differ only in name, int parameter, output
+  * schema and the table call — see [[TableProcedure.load]].
   */
-private[sources] class VacuumProcedure(
-    tables: ConcurrentHashMap[String, DmlTable])
+private[sources] final class TableProcedure(
+    tables: ConcurrentHashMap[String, DmlTable],
+    procName: String, doc: String, param: String, out: StructType,
+    run: (DmlTable, Int) => Product)
     extends procedures.UnboundProcedure {
-  override def name(): String = "vacuum"
-  override def description(): String =
-    "expire all but the newest `keep` version snapshots of `table`"
+  override def name(): String = procName
+  override def description(): String = doc
 
   override def bind(inputType: StructType): procedures.BoundProcedure =
     new procedures.BoundProcedure {
-      override def name(): String = VacuumProcedure.this.name()
-      override def description(): String = VacuumProcedure.this.description()
+      override def name(): String = procName
+      override def description(): String = doc
       override def isDeterministic: Boolean = false
       override def parameters(): Array[procedures.ProcedureParameter] = Array(
         procedures.ProcedureParameter.in("table", types.StringType).build(),
-        procedures.ProcedureParameter.in("keep", types.IntegerType).build())
+        procedures.ProcedureParameter.in(param, types.IntegerType).build())
       override def call(input: InternalRow): util.Iterator[Scan] = {
         val tname = input.getUTF8String(0).toString
-        val keep = input.getInt(1)
-        require(keep >= 1, s"vacuum keep must be >= 1, got $keep")
+        val n = input.getInt(1)
+        require(n >= 1, s"$procName $param must be >= 1, got $n")
         val t = Option(tables.get(tname)).getOrElse(
-          throw new RuntimeException(s"vacuum: no such table '$tname'"))
-        val (expired, retained) = t.vacuum(keep)
-        val out = new StructType()
-          .add("expired_versions", types.IntegerType, nullable = false)
-          .add("retained_versions", types.IntegerType, nullable = false)
+          throw new RuntimeException(s"$procName: no such table '$tname'"))
         val row = UnsafeProjection.create(out)(
           new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            Array[Any](expired, retained))).copy()
+            run(t, n).productIterator.toArray[Any])).copy()
         // procedure output must be a LocalScan in Spark 4.1 (the result is
         // driver-sized by definition — counts, not data)
         val result = new org.apache.spark.sql.connector.read.LocalScan {
@@ -243,52 +235,31 @@ private[sources] class VacuumProcedure(
     }
 }
 
-/** `system.optimize(table, target_mb)` — small-file compaction as a DSv2
-  * stored procedure over the file-backed snapshot store (the lakehouse
-  * `OPTIMIZE` / `rewrite_data_files` surface, and the operators/Compact
-  * idea applied to a GOVERNED table): the live snapshot's parquet files
-  * coalesce (ZERO shuffle — the q_src_compact contract) into
-  * ~`target_mb`-sized files written through the same staging path as any
-  * write, installed as a NEW VERSION whose rows are identical. Retained
-  * history still serves (time travel reads the old file sets until
-  * `vacuum` expires them), so OPTIMIZE is invisible to readers — the
-  * returned row reports (files_before, files_after, rows).
-  */
-private[sources] class OptimizeProcedure(
-    tables: ConcurrentHashMap[String, DmlTable])
-    extends procedures.UnboundProcedure {
-  override def name(): String = "optimize"
-  override def description(): String =
-    "bin-pack `table`'s live snapshot into ~target_mb parquet files as a new version"
+private[sources] object TableProcedure {
+  private def ints(names: String*): StructType =
+    names.foldLeft(new StructType())(_.add(_, types.IntegerType, nullable = false))
 
-  override def bind(inputType: StructType): procedures.BoundProcedure =
-    new procedures.BoundProcedure {
-      override def name(): String = OptimizeProcedure.this.name()
-      override def description(): String = OptimizeProcedure.this.description()
-      override def isDeterministic: Boolean = false
-      override def parameters(): Array[procedures.ProcedureParameter] = Array(
-        procedures.ProcedureParameter.in("table", types.StringType).build(),
-        procedures.ProcedureParameter.in("target_mb", types.IntegerType).build())
-      override def call(input: InternalRow): util.Iterator[Scan] = {
-        val tname = input.getUTF8String(0).toString
-        val targetMb = input.getInt(1)
-        require(targetMb >= 1, s"optimize target_mb must be >= 1, got $targetMb")
-        val t = Option(tables.get(tname)).getOrElse(
-          throw new RuntimeException(s"optimize: no such table '$tname'"))
-        val (before, after, rows) = t.optimize(targetMb.toLong << 20)
-        val out = new StructType()
-          .add("files_before", types.IntegerType, nullable = false)
-          .add("files_after", types.IntegerType, nullable = false)
-          .add("rows", types.LongType, nullable = false)
-        val row = UnsafeProjection.create(out)(
-          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-            Array[Any](before, after, rows))).copy()
-        val result = new org.apache.spark.sql.connector.read.LocalScan {
-          override def readSchema(): StructType = out
-          override def rows(): Array[InternalRow] = Array(row)
-        }
-        util.List.of[Scan](result).iterator()
-      }
+  /** The `system` procedure called `name`, if there is one:
+    *   - `vacuum(table, keep)` — snapshot retention ([[DmlTable.vacuum]]),
+    *     returning (expired_versions, retained_versions);
+    *   - `optimize(table, target_mb)` — small-file compaction
+    *     ([[DmlTable.optimize]]: the live snapshot's parquet files
+    *     coalesce with ZERO shuffle into ~`target_mb`-sized files,
+    *     installed as a NEW VERSION with identical rows, so time travel
+    *     still reads the old file sets), returning (files_before,
+    *     files_after, rows).
+    */
+  def load(tables: ConcurrentHashMap[String, DmlTable], name: String): Option[TableProcedure] =
+    name match {
+      case "vacuum" => Some(new TableProcedure(tables, "vacuum",
+        "expire all but the newest `keep` version snapshots of `table`", "keep",
+        ints("expired_versions", "retained_versions"), _.vacuum(_)))
+      case "optimize" => Some(new TableProcedure(tables, "optimize",
+        "bin-pack `table`'s live snapshot into ~target_mb parquet files as a new version",
+        "target_mb",
+        ints("files_before", "files_after").add("rows", types.LongType, nullable = false),
+        (t, mb) => t.optimize(mb.toLong << 20)))
+      case _ => None
     }
 }
 

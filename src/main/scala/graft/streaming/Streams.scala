@@ -138,53 +138,39 @@ object Streams {
       // between the two — the exact unit-sum is bit-identical in both.
       .agg(count(lit(1)).as("cnt"), graft.Exact.dsum(col("value"), 2).as("total"))
 
+  /** Timestamp → epoch micros (getTime alone truncates to ms). */
+  private[streaming] def micros(ts: Timestamp): Long =
+    ts.getTime / 1000 * 1000000L + ts.getNanos / 1000
+
+  /** One key's rows in feed order, (µs, event_id): the post-shuffle
+    * iterator order is not the feed order.
+    */
+  private[streaming] def inFeedOrder(rows: Iterator[Event]): Seq[Event] =
+    rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
+
   /** Sessionization with arbitrary per-key state (flatMapGroupsWithState,
     * event-time timeout): emits a session when the gap is exceeded or the
     * watermark passes. State per key is O(1) (counters + bounds), the
     * required shape for billions of keys.
     */
-  /** Timestamp → epoch micros (getTime alone truncates to ms). */
-  private def micros(ts: Timestamp): Long =
-    ts.getTime / 1000 * 1000000L + ts.getNanos / 1000
-
   def sessionizeFMGWS(events: Dataset[Event], gapUs: Long = 30 * 60 * 1000000L)
       : Dataset[SessionOut] = {
     import events.sparkSession.implicits._
 
     def fn(userId: Long, rows: Iterator[Event], state: GroupState[SessState])
-        : Iterator[SessionOut] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var cur = state.getOption.orNull
-      val out = scala.collection.mutable.ArrayBuffer.empty[SessionOut]
+        : Iterator[SessionOut] =
       if (state.hasTimedOut) {
-        if (cur != null)
-          out += SessionOut(userId, cur.startUs, cur.n, cur.total)
+        val out = state.getOption.map(Sessionize.close(userId, _))
         state.remove()
+        out.iterator
       } else {
-        for (e <- sorted) {
-          val us = micros(e.ts)
-          if (cur == null) cur = SessState(us, us, 1, e.value)
-          else if (us - cur.lastUs < gapUs) // strict <, matching session_window
-            // min/max union: a late-but-within-watermark row from a later
-            // micro-batch merges without moving lastUs backward or losing
-            // an earlier startUs (ADVICE r3). With gap >= watermark delay
-            // such a row can never be a separate EARLIER session (it would
-            // need ts < startUs - gap, below the watermark), so the union
-            // is exactly batch session_window's.
-            cur = SessState(math.min(cur.startUs, us), math.max(cur.lastUs, us),
-              cur.n + 1, cur.total + e.value)
-          else {
-            out += SessionOut(userId, cur.startUs, cur.n, cur.total)
-            cur = SessState(us, us, 1, e.value)
-          }
+        val (cur, closed) = Sessionize.merge(userId, state.getOption, rows, gapUs)
+        cur.foreach { c =>
+          state.update(c)
+          state.setTimeoutTimestamp(Sessionize.closesAtMs(c, gapUs))
         }
-        if (cur != null) {
-          state.update(cur)
-          state.setTimeoutTimestamp((cur.lastUs + gapUs) / 1000 + 1)
-        }
+        closed.iterator
       }
-      out.iterator
-    }
 
     events
       .withWatermark("ts", "10 minutes")
@@ -211,30 +197,15 @@ object Streams {
 
     override def handleInputRows(
         userId: Long, rows: Iterator[Event], timers: TimerValues): Iterator[SessionOut] = {
-      val sorted = rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))
-      var cur = if (sess.exists()) sess.get() else null
-      val out = scala.collection.mutable.ArrayBuffer.empty[SessionOut]
-      for (e <- sorted) {
-        val us = micros(e.ts)
-        if (cur == null) cur = SessState(us, us, 1, e.value)
-        else if (us - cur.lastUs < gapUs) // strict <, matching session_window
-          // min/max union — see sessionizeFMGWS: late-but-within-watermark
-          // merges can't move lastUs backward, and with gap >= watermark
-          // delay can never be a separate earlier session.
-          cur = SessState(math.min(cur.startUs, us), math.max(cur.lastUs, us),
-            cur.n + 1, cur.total + e.value)
-        else {
-          out += SessionOut(userId, cur.startUs, cur.n, cur.total)
-          cur = SessState(us, us, 1, e.value)
-        }
-      }
-      if (cur != null) {
-        sess.update(cur)
+      val prior = if (sess.exists()) Some(sess.get()) else None
+      val (cur, closed) = Sessionize.merge(userId, prior, rows, gapUs)
+      cur.foreach { c =>
+        sess.update(c)
         // one live timer per key: drop the stale one, arm at session close
         getHandle.listTimers().foreach(t => getHandle.deleteTimer(t))
-        getHandle.registerTimer((cur.lastUs + gapUs) / 1000 + 1)
+        getHandle.registerTimer(Sessionize.closesAtMs(c, gapUs))
       }
-      out.iterator
+      closed.iterator
     }
 
     override def handleExpiredTimer(
@@ -242,7 +213,7 @@ object Streams {
       if (sess.exists()) {
         val cur = sess.get()
         sess.clear()
-        Iterator.single(SessionOut(userId, cur.startUs, cur.n, cur.total))
+        Iterator.single(Sessionize.close(userId, cur))
       } else Iterator.empty
   }
 
@@ -361,7 +332,7 @@ object Streams {
         userId: Long, rows: Iterator[Event], timers: TimerValues): Iterator[FunnelOut] = {
       var cur = if (st.exists()) st.get() else FunnelState(0, 0L)
       val out = scala.collection.mutable.ArrayBuffer.empty[FunnelOut]
-      for (e <- rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))) {
+      for (e <- inFeedOrder(rows)) {
         val us = micros(e.ts)
         val advance = cur.stage match {
           case 0 => e.event_type == "view"
@@ -439,9 +410,9 @@ object Streams {
       val local = scala.collection.mutable.Map.empty[Long, SSEntry]
       entries.iterator().foreach { p => local(p._1) = p._2 }
       var n = if (seen.exists()) seen.get() else 0L
-      // post-shuffle iterator order is not feed order; sort for a
-      // deterministic sketch (same contract as FunnelProcessor)
-      for (e <- rows.toSeq.sortBy(e => (micros(e.ts), e.event_id))) {
+      // feed order for a deterministic sketch (same contract as
+      // FunnelProcessor)
+      for (e <- inFeedOrder(rows)) {
         val item = e.user_id
         n += 1
         local.get(item) match {
@@ -472,5 +443,50 @@ object Streams {
         new HeavyHittersProcessor(capacity),
         TimeMode.None(),
         OutputMode.Update())
+  }
+}
+
+/** The one gap-merge loop of both sessionizers. A serializable holder,
+  * not a method on [[Streams]]: flatMapGroupsWithState ships its
+  * function to executors, and a call into `object Streams` would make
+  * that closure capture the non-serializable `Streams$` module.
+  */
+private[streaming] object Sessionize extends Serializable {
+  import Streams.{Event, SessionOut, SessState, inFeedOrder, micros}
+
+  def close(userId: Long, s: SessState): SessionOut =
+    SessionOut(userId, s.startUs, s.n, s.total)
+
+  /** Event-time ms at which `s` closes: the timeout/timer both arm. */
+  def closesAtMs(s: SessState, gapUs: Long): Long = (s.lastUs + gapUs) / 1000 + 1
+
+  /** Fold one key's `rows`, in (µs, event_id) order, into its open
+    * session `prior`.
+    * @return the open session after the last row (None only when there
+    *         was neither a prior session nor a row) and the sessions the
+    *         rows closed, in order.
+    */
+  def merge(userId: Long, prior: Option[SessState], rows: Iterator[Event], gapUs: Long)
+      : (Option[SessState], Seq[SessionOut]) = {
+    var cur = prior
+    val closed = Seq.newBuilder[SessionOut]
+    for (e <- inFeedOrder(rows)) {
+      val us = micros(e.ts)
+      cur = cur match {
+        case Some(c) if us - c.lastUs < gapUs => // strict <, matching session_window
+          // min/max union: a late-but-within-watermark row from a later
+          // micro-batch merges without moving lastUs backward or losing
+          // an earlier startUs (ADVICE r3). With gap >= watermark delay
+          // such a row can never be a separate EARLIER session (it would
+          // need ts < startUs - gap, below the watermark), so the union
+          // is exactly batch session_window's.
+          Some(SessState(math.min(c.startUs, us), math.max(c.lastUs, us),
+            c.n + 1, c.total + e.value))
+        case open =>
+          open.foreach(closed += close(userId, _))
+          Some(SessState(us, us, 1, e.value))
+      }
+    }
+    (cur, closed.result())
   }
 }

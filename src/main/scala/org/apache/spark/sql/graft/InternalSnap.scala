@@ -53,13 +53,13 @@ object InternalSnap {
 
   private val Cap = BigInt(Long.MaxValue)
 
-  /** RDD ids of graft-snapped checkpoints — the [[SnapScanStrategy]] gate:
-    * only these scans get the canonicalization-fixed physical node, so
-    * every other LogicalRDD in the session plans exactly as stock Spark.
+  /** RDD ids of live graft-snapped checkpoints — the [[SnapScanStrategy]]
+    * gate: only these scans get the canonicalization-fixed physical node,
+    * so every other LogicalRDD in the session plans exactly as stock
+    * Spark. [[free]] forgets an id with its blocks.
     */
   private val snapRddIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-  private[graft] def registerSnapRdd(id: Int): Unit = snapRddIds.add(id)
-  private[graft] def isSnapRdd(id: Int): Boolean = snapRddIds.contains(id)
+  def isSnapRdd(id: Int): Boolean = snapRddIds.contains(id)
 
   /** Checkpoint `df` — reliable under a checkpoint dir, executor-local
     * otherwise — and return its bare `LogicalRDD` leaf. A reliable
@@ -130,7 +130,7 @@ object InternalSnap {
       l.output.find(_.name == k).getOrElse(
         throw new IllegalArgumentException(
           s"snapKeyed: no output column '$k' in ${l.output}")))
-    registerSnapRdd(l.rdd.id) // route through SnapScanStrategy (reuse fix)
+    snapRddIds.add(l.rdd.id) // route through SnapScanStrategy (reuse fix)
     reLeaf(l, in.getOrElse(df.sparkSession).asInstanceOf[SparkSession],
       HashPartitioning(attrs, n))
   }
@@ -144,12 +144,15 @@ object InternalSnap {
     * block files in one ×100 hop-batched SSSP pass. Only call on frames
     * whose consumers have fully materialized (the blocks cannot be
     * recomputed — checkpointing truncated the lineage). Reliable
-    * checkpoint FILES stay in the checkpoint dir; only block storage frees.
+    * checkpoint FILES stay in the checkpoint dir; only block storage
+    * frees, and the snap registry forgets the leaf's id.
     */
   def free(df: DataFrame): Unit = {
     df.unpersist(blocking = false)
     df.asInstanceOf[Dataset[Row]].queryExecution.analyzed.foreach {
-      case l: LogicalRDD if l.rdd.checkpointData.isDefined => l.rdd.unpersist(blocking = false)
+      case l: LogicalRDD if l.rdd.checkpointData.isDefined =>
+        l.rdd.unpersist(blocking = false)
+        snapRddIds.remove(l.rdd.id)
       case _ => ()
     }
   }

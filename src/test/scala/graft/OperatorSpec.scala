@@ -77,16 +77,20 @@ class OperatorSpec extends SparkSpecBase {
       finally spark.sparkContext.clearJobGroup()
       spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
     }
-    // two triangles: converge in round 1 + confirming round = 2 rounds
+    // two triangles: labels settle in superstep 1, the improved vertices
+    // re-announce in 2, nothing is sent in 3 = 3 supersteps
     val triangles = Seq((1L, 2L), (2L, 3L), (3L, 1L), (10L, 11L), (11L, 12L), (12L, 10L))
       .toDF("a", "b")
-    // 5-node chain 0-1-2-3-4: diameter 4 → 4 propagation + 1 confirming = 5
+    // 5-node chain 0-1-2-3-4: diameter 4 → 4 propagation + 2 = 6 supersteps
     val chain = (0L until 4L).map(i => (i, i + 1)).toDF("a", "b")
     val jShort = jobsFor("cc-jobcount-2r", triangles)
     val jLong = jobsFor("cc-jobcount-5r", chain)
-    // marginal budget: 4 jobs/round (AQE shuffle-stage job, broadcast
-    // job, eager-checkpoint job, one slack) × 3 extra rounds; a separate
-    // probe job per round would add ≥3 and trip the bound
+    // marginal budget: 4 jobs/superstep × 3 extra supersteps. A Pregel
+    // superstep is ONE job, its eager checkpoint, whose stages include
+    // the message shuffle: the loop session runs AQE off (no per-stage
+    // jobs) and the state never broadcasts (no broadcast job). The rest
+    // is slack for a Spark or planner change; a separate probe job per
+    // superstep would add ≥3 more
     assert(jLong - jShort <= 3 * 4,
       s"labelPropagate marginal cost ${jLong - jShort} jobs over 3 extra " +
         "rounds — convergence probe is running as a separate job again?")
@@ -1287,6 +1291,25 @@ class OperatorSpec extends SparkSpecBase {
     assert(stored -- before == leaves(core),
       s"KCore left blocks of dead generations: ${(stored -- before) -- leaves(core)}")
     InternalSnap.free(core)
+
+    val beforeCc = stored
+    val cc = operators.Components.labelPropagate(edges, "u", "v")
+    assert(cc.count() == 7 && cc.select("label").distinct().count() == 1)
+    assert(stored -- beforeCc == leaves(cc),
+      s"labelPropagate left blocks of dead generations: ${(stored -- beforeCc) -- leaves(cc)}")
+    InternalSnap.free(cc)
+    val beforeRefusal = stored
+    intercept[IllegalArgumentException](
+      operators.Components.labelPropagate(edges, "u", "v", maxIter = 1))
+    assert(stored == beforeRefusal,
+      s"a refused labelPropagate left blocks: ${stored -- beforeRefusal}")
+
+    // the snap registry forgets a freed snap with its blocks
+    val keyed = InternalSnap.snapKeyed(spark.range(0, 100).toDF("id"), Seq("id"), 2)
+    val keyedIds = leaves(keyed)
+    assert(keyedIds.size == 1 && keyedIds.forall(InternalSnap.isSnapRdd))
+    InternalSnap.free(keyed)
+    assert(!keyedIds.exists(InternalSnap.isSnapRdd), "free left the id in the snap registry")
   }
 
   test("q_dedup_incremental admits nothing from an empty corpus instead of NPE-ing") {

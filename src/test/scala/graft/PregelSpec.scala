@@ -5,11 +5,11 @@ import scala.util.Random
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Components, Pregel}
+import graft.operators.Pregel
 
 /** The general vertex-program surface: SSSP against driver-side Dijkstra,
-  * components against the independently-tested min-label implementation,
-  * and the halting/convergence contract (GraphX semantics).
+  * components against driver-side union-find, and the halting/convergence
+  * contract (GraphX semantics).
   */
 class PregelSpec extends SparkSpecBase {
   import spark.implicits._
@@ -56,7 +56,7 @@ class PregelSpec extends SparkSpecBase {
     }
   }
 
-  test("Pregel min-id flooding equals Components.labelPropagate") {
+  test("two-directional Pregel min-id flooding equals driver-side union-find") {
     val rnd = new Random(7)
     val pairs = (0 until 60).map(_ => (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
       .filter { case (a, b) => a != b }.distinct
@@ -70,9 +70,17 @@ class PregelSpec extends SparkSpecBase {
       .setMaxIter(50)
       .run()
       .select("id", "cc").as[(Long, Long)].collect().toMap
-    val want = Components.labelPropagate(es, "src", "dst", maxIter = 50)
-      .as[(Long, Long)].collect().toMap
-    assert(got === want)
+    // reference: union-find on the collected pairs, rooted at the min id
+    val parent = collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    assert(got === parent.keys.map(v => v -> find(v)).toMap)
   }
 
   test("halting contract: unreached vertices keep state; no messages ends the run") {
@@ -220,65 +228,5 @@ class PregelSpec extends SparkSpecBase {
       Pregel.src("x") + lit(0L) * Pregel.dst("x"))
     assert(count(both, "GraftSnapScan") == 4,
       s"dst-reading superstep must scan the dst state too:\n$both")
-  }
-
-  test("salted message fold: identical results on a star, pinned two-phase plan") {
-    // Star fixture: every spoke points at hub 0 (in-degree n) — the
-    // power-law worst case for the message fold. The salted run must
-    // compute the same fixed point and its recorded superstep plan must
-    // show the TWO-LEVEL fold: a (id, salt) pre-aggregation exchange
-    // before the per-id merge (two aggregate pairs, two exchanges) vs
-    // the single-level plan's one.
-    val n = 5000
-    val vs = (0L to n).toDF("id")
-    val es = (1L to n).map(i => (i, 0L)).toDF("src", "dst")
-    def flood(salt: Int, t: String): Map[Long, Long] = {
-      val out = Pregel(vs, es)
-        .withVertexColumn("m", col("id"), coalesce(Pregel.msg, col("m")))
-        .sendMsgToDst(Pregel.src("m"))
-        .aggMsgs(min(Pregel.msg))
-        .setMaxIter(2).setRequireConverged(false)
-        .setMessageSalt(salt)
-        .setTag(t)
-        .run()
-      out.write.format("noop").mode("overwrite").save()
-      out.select("id", "m").as[(Long, Long)].collect().toMap
-    }
-    val plain = flood(1, "spec-salt-off")
-    val salted = flood(8, "spec-salt-on")
-    assert(salted === plain, "salting changed the computed fixed point")
-    assert(plain(0L) === 1L, "hub must take the spoke minimum")
-    def count2(plan: String, needle: String): Int =
-      plan.linesIterator.count(_.contains(needle))
-    val pOff = Pregel.lastPlans(spark)("spec-salt-off")
-    val pOn = Pregel.lastPlans(spark)("spec-salt-on")
-    assert(count2(pOff, "Exchange") == 1,
-      s"single-level superstep must have ONE frontier exchange:\n$pOff")
-    assert(count2(pOn, "Exchange") == 2,
-      s"salted superstep must add exactly the (id, salt) pre-fold exchange:\n$pOn")
-    assert(count2(pOn, "HashAggregate") == count2(pOff, "HashAggregate") + 2,
-      s"salted superstep must run a second partial+final aggregate pair:\n$pOn")
-    assert(pOn.contains("_pregel_salt"),
-      s"pre-fold must group by the salt column:\n$pOn")
-    assert(!pOn.contains("Broadcast"),
-      s"state must never broadcast inside the salted loop either:\n$pOn")
-
-    // Salted ≡ unsalted on irregular random graphs too (not just the
-    // star): min-flood to convergence.
-    val rnd = new Random(13)
-    val pairs = (0 until 80).map(_ => (rnd.nextInt(50).toLong, rnd.nextInt(50).toLong))
-      .filter { case (a, b) => a != b }.distinct
-    val res = Seq(1, 8).map { s =>
-      Pregel(pairs.toDF("src", "dst").select(col("src").as("id")).union(
-          pairs.toDF("src", "dst").select(col("dst"))).distinct(),
-          pairs.toDF("src", "dst"))
-        .withVertexColumn("cc", col("id"), least(col("cc"), Pregel.msg))
-        .sendMsgToDst(when(Pregel.src("cc") < Pregel.dst("cc"), Pregel.src("cc")))
-        .sendMsgToSrc(when(Pregel.dst("cc") < Pregel.src("cc"), Pregel.dst("cc")))
-        .aggMsgs(min(Pregel.msg))
-        .setMaxIter(50).setMessageSalt(s)
-        .run().select("id", "cc").as[(Long, Long)].collect().toMap
-    }
-    assert(res(0) === res(1), "salting changed a random-graph fixed point")
   }
 }
